@@ -11,10 +11,23 @@ Exact family (reference parity):
 
 Near-duplicate family (training-data-pipeline extensions):
 - ``dedup_fingerprint``        md5-of-normalized-text exact-content dedup
-- ``minhash_candidate_pairs``  MinHash + LSH banding, all native exprs
+- ``minhash_candidate_pairs``  MinHash + LSH banding → exact-verified pairs
 - ``minhash_dedup``            LSH candidates → Jaccard verify → connected
   components → keep one doc per near-dup cluster
+- ``build_minhash_index``      train-once, clone-collapsed signature table
+- ``incremental_minhash_dedup`` probe a batch against that index, then
+  clean the survivors batch-internally
+- ``weighted_minhash_candidate_pairs`` / ``_dedup``,
+  ``build_weighted_minhash_index``, ``incremental_weighted_minhash_dedup``
+  — the weighted twins: ICWS signatures of gram MULTISETS, verified
+  with generalized (tf-weighted) Jaccard
 - ``simhash_dedup``            64-bit SimHash + Hamming-ball grouping
+
+Each MinHash operation has ONE body over a frozen ``_SigFamily``
+record (``_SET`` / ``_WEIGHTED``: signer, ``shingles`` / ``whashes``
+content, ``jaccard`` / ``weighted_jaccard_of`` verify, similarity
+column); the public names are thin bindings, and the corpus-probe
+stage (``_corpus_probe``) also serves the fused operators.
 
 Scale notes: every operator here is a shuffle-on-key hash aggregation or
 an equi-join on a derived blocking key — no cross products anywhere. The
@@ -26,6 +39,9 @@ and AQE's skew-join splitting handles hot buckets (e.g. boilerplate docs).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from contextlib import contextmanager
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -293,8 +309,7 @@ def _size_bytes(conf_val: str) -> int:
 # scan still fans out (0.58 MB sf0.1 docs parquet → 5 tasks), large
 # enough that each task amortizes its Python worker (32 tasks of ~150
 # rows measured SLOWER than 1 at the driver — VERDICT r15 item 1).
-_SPREAD_TASK_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_TASK_BYTES", 128 << 10))
+_SPREAD_TASK_BYTES = 128 << 10
 
 
 def _spread_deficient_scan(df: DataFrame, key_col: str) -> DataFrame:
@@ -445,20 +460,6 @@ def _band_keys(
     ).select(id_col, "bk.band", "bk.bucket")
 
 
-def _cap_buckets(banded, max_bucket_size: int | None):
-    """Per-(band, bucket) hard cap — the m² skew suppressor shared by
-    the set and weighted candidate generators (one spelling, so a
-    guard fix cannot silently miss a family). None = off."""
-    if max_bucket_size is None:
-        return banded
-    w = Window.partitionBy("band", "bucket")
-    return (
-        banded.withColumn("__bsz", F.count(F.lit(1)).over(w))
-        .filter(F.col("__bsz") <= max_bucket_size)
-        .drop("__bsz")
-    )
-
-
 def collapse_clones(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
     """Keep one min-id representative per byte-identical ``content_col``
     — the shared clone-collapse wrapper over ``clone_representatives``
@@ -507,41 +508,8 @@ def minhash_candidate_pairs(
     buckets too (b bands = b independent chances), so recall loss is
     marginal while the worst-case join cost becomes bounded. None = off.
     """
-    own_sigs = sigs is None
-    if own_sigs:
-        sigs = minhash_signatures(
-            df, text_col, id_col, num_hashes, shingle_size)
-        # One pass computes shingles + signatures; both the band join and
-        # the verify join-back reuse it. At cluster scale this would be a
-        # persisted intermediate table; locally an eager cache plays that
-        # role. The count() is load-bearing: persist() is lazy, and the
-        # band self-join fans out into TWO scans of sigs — tasks racing on
-        # not-yet-cached partitions each recompute the full signature
-        # pipeline (measured 22s vs 8s at sf0.1). Materializing once
-        # before fan-out removes the race.
-        sigs = sigs.persist()
-        sigs.count()
-
-    banded = _cap_buckets(
-        _band_keys(sigs, id_col, num_hashes, bands), max_bucket_size)
-
-    pairs = band_candidate_pairs(banded, id_col)
-    shingle_sets = sigs.select(F.col(id_col), F.col("shingles"))
-    out = (
-        pairs.join(shingle_sets.withColumnRenamed(id_col, "id_a")
-                   .withColumnRenamed("shingles", "sh_a"), "id_a")
-        .join(shingle_sets.withColumnRenamed(id_col, "id_b")
-              .withColumnRenamed("shingles", "sh_b"), "id_b")
-        .select("id_a", "id_b",
-                jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard_sim"))
-    )
-    # Materialize the result before releasing the cached signatures: a
-    # long-lived session running the whole catalog (the driver does)
-    # would otherwise accumulate cached blocks across invocations.
-    out = out.localCheckpoint(eager=True)
-    if own_sigs:
-        sigs.unpersist()
-    return out
+    return _candidate_pairs(_SET, df, text_col, id_col, num_hashes, bands,
+                            shingle_size, max_bucket_size, sigs)
 
 
 def band_candidate_pairs(banded: DataFrame, id_col: str) -> DataFrame:
@@ -633,7 +601,7 @@ def minhash_dedup(
     """Near-duplicate removal: LSH candidates → exact-Jaccard verify at
     ``threshold`` → connected components over the surviving pair graph →
     keep the min-id doc per component. Returns the deduplicated frame.
-    ``max_bucket_size`` forwards the m² skew cap (``_cap_buckets``) —
+    ``max_bucket_size`` forwards the per-bucket m² skew cap —
     arm it (e.g. 4096) on corpora that may contain degenerate
     mega-buckets; the incremental/fused family members arm it by
     default at their call sites. ``sigs`` forwards a precomputed,
@@ -641,17 +609,8 @@ def minhash_dedup(
     ``minhash_candidate_pairs`` contract) so callers that already
     signed the rows — the incremental path signs the batch once and
     reuses it for survivors — skip a second full signing pass."""
-    from pyspark_deduplication_spark.operators.linkage import connected_components
-
-    edges = minhash_candidate_pairs(
-        df, text_col, id_col, num_hashes, bands, shingle_size,
-        max_bucket_size=max_bucket_size, sigs=sigs,
-    ).filter(F.col("jaccard_sim") >= threshold)
-    comps = connected_components(edges, "id_a", "id_b")  # (node, component)
-    losers = comps.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
-    )
-    return df.join(losers, on=id_col, how="left_anti")
+    return _dedup(_SET, df, text_col, id_col, threshold, num_hashes, bands,
+                  shingle_size, max_bucket_size, sigs)
 
 
 def _icws_mix(x: np.ndarray, salt: int) -> np.ndarray:
@@ -788,44 +747,14 @@ def weighted_minhash_candidate_pairs(
     max_bucket_size: int | None = None,
     sigs: DataFrame | None = None,
 ) -> DataFrame:
-    """LSH banding over ICWS signatures: same compact (id, band,
-    bucket) shuffle, bucket-join and skew guard as the unweighted
-    path (``_band_keys``/``band_candidate_pairs`` are shared), but
-    collision probability tracks WEIGHTED Jaccard, and the verify
-    join-back computes the exact Σmin/Σmax on the hashed multisets.
-    Returns distinct (id_a, id_b, weighted_jaccard_sim).
-
-    ``sigs`` forwards precomputed ``weighted_minhash_signatures``
-    output — same caller-owned lifecycle and determinism contract as
-    ``minhash_candidate_pairs``' ``sigs=`` (must be persisted or
-    parquet-backed; it fans out into the band keys AND the whashes
-    verify join-back)."""
-    own_sigs = sigs is None
-    if own_sigs:
-        sigs = weighted_minhash_signatures(
-            df, text_col, id_col, num_hashes, shingle_size)
-        # eager materialization before the band fan-out (same race as
-        # minhash_candidate_pairs — two downstream scans)
-        sigs = sigs.persist()
-        sigs.count()
-
-    banded = _cap_buckets(
-        _band_keys(sigs, id_col, num_hashes, bands), max_bucket_size)
-    pairs = band_candidate_pairs(banded, id_col)
-    msets = sigs.select(F.col(id_col), F.col("whashes"))
-    out = (
-        pairs.join(msets.withColumnRenamed(id_col, "id_a")
-                   .withColumnRenamed("whashes", "wh_a"), "id_a")
-        .join(msets.withColumnRenamed(id_col, "id_b")
-              .withColumnRenamed("whashes", "wh_b"), "id_b")
-        .select("id_a", "id_b",
-                weighted_jaccard_of(F.col("wh_a"), F.col("wh_b"))
-                .alias("weighted_jaccard_sim"))
-    )
-    out = out.localCheckpoint(eager=True)
-    if own_sigs:
-        sigs.unpersist()
-    return out
+    """LSH banding over ICWS signatures — ``minhash_candidate_pairs``
+    with collision probability tracking WEIGHTED Jaccard and the verify
+    join-back computing the exact Σmin/Σmax on the hashed multisets.
+    Returns distinct (id_a, id_b, weighted_jaccard_sim); ``sigs`` takes
+    precomputed ``weighted_minhash_signatures`` output under the same
+    caller-owned contract."""
+    return _candidate_pairs(_WEIGHTED, df, text_col, id_col, num_hashes,
+                            bands, shingle_size, max_bucket_size, sigs)
 
 
 def weighted_minhash_dedup(
@@ -839,22 +768,12 @@ def weighted_minhash_dedup(
     max_bucket_size: int | None = None,
     sigs: DataFrame | None = None,
 ) -> DataFrame:
-    """Near-duplicate removal under tf-weighted Jaccard: ICWS-LSH
-    candidates → exact Σmin/Σmax verify at ``threshold`` → connected
-    components → keep the min-id doc per component. ``max_bucket_size``
-    forwards the shared m² skew cap, and ``sigs`` a precomputed,
-    caller-materialized ``weighted_minhash_signatures`` frame, as in
-    :func:`minhash_dedup`."""
-    from pyspark_deduplication_spark.operators.linkage import connected_components
-
-    edges = weighted_minhash_candidate_pairs(
-        df, text_col, id_col, num_hashes, bands, shingle_size,
-        max_bucket_size=max_bucket_size, sigs=sigs,
-    ).filter(F.col("weighted_jaccard_sim") >= threshold)
-    comps = connected_components(edges, "id_a", "id_b")
-    losers = comps.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col))
-    return df.join(losers, on=id_col, how="left_anti")
+    """``minhash_dedup`` under tf-weighted Jaccard: ICWS-LSH candidates,
+    exact Σmin/Σmax verify at ``threshold``, connected components, min-id
+    keep; ``max_bucket_size`` and ``sigs`` (``weighted_minhash_signatures``
+    output) as in :func:`minhash_dedup`."""
+    return _dedup(_WEIGHTED, df, text_col, id_col, threshold, num_hashes,
+                  bands, shingle_size, max_bucket_size, sigs)
 
 
 def build_weighted_minhash_index(
@@ -864,17 +783,12 @@ def build_weighted_minhash_index(
     num_hashes: int = 64,
     shingle_size: int = 3,
 ) -> DataFrame:
-    """Persist-once ICWS signature table — the weighted twin of
-    ``build_minhash_index``: (id, whashes, signature) with exact
-    multiset clones collapsed to their min-id representative
-    (byte-identical gram multisets have identical weighted Jaccard to
-    any probe, so the collapse is lossless for match decisions while
-    clone-heavy buckets shed their mass). Feed to
-    ``incremental_weighted_minhash_dedup(corpus_sigs=...)``; append
-    each ingest batch's surviving signatures to stay current."""
-    sigs = weighted_minhash_signatures(
-        corpus, text_col, id_col, num_hashes, shingle_size)
-    return collapse_clones(sigs, id_col, "whashes")
+    """The weighted twin of ``build_minhash_index``: (id, whashes,
+    signature) with byte-identical gram multisets collapsed to their
+    min-id representative (lossless: identical weighted Jaccard to any
+    probe). Feed to ``incremental_weighted_minhash_dedup(corpus_sigs=)``."""
+    return _build_index(_WEIGHTED, corpus, text_col, id_col, num_hashes,
+                        shingle_size)
 
 
 def incremental_weighted_minhash_dedup(
@@ -892,63 +806,11 @@ def incremental_weighted_minhash_dedup(
 ) -> DataFrame:
     """Tf-weighted near-dup filter for a NEW batch against an EXISTING
     corpus — ``incremental_minhash_dedup`` with ICWS signatures and
-    exact Σmin/Σmax verification. Same contract throughout: the corpus
-    never self-joins (its banded keys come from the persisted index or
-    are derived once here), a batch doc at/above ``threshold`` against
-    ANY corpus doc drops, survivors clean batch-internally with
-    ``weighted_minhash_dedup``, the skew guard (multiset clone
-    collapse + per-bucket cap) arms via ``max_bucket_size`` with the
-    same ``pre_collapsed`` provenance inference as the set path, and a
-    caller-provided ``corpus_sigs`` must be deterministic
-    (parquet-backed) or persisted — it fans out to both the band probe
-    and the whashes verify join-back (see the set-path docstring)."""
-    new_sigs = weighted_minhash_signatures(
-        new_docs, text_col, id_col, num_hashes, shingle_size).persist()
-    if pre_collapsed is None:
-        pre_collapsed = corpus_sigs is not None
-    # caller-owned lifecycle: only frames derived HERE get persisted /
-    # unpersisted — evicting a caller-provided train-once index would
-    # force every later ingest batch to re-materialize it
-    own_corpus_sigs = corpus_sigs is None
-    # both eager caches in ONE action — the set-path union-count shape
-    if own_corpus_sigs:
-        corpus_sigs = weighted_minhash_signatures(
-            corpus, text_col, id_col, num_hashes, shingle_size).persist()
-        new_sigs.unionByName(corpus_sigs).count()
-    else:
-        new_sigs.count()
-    cand = incremental_minhash_candidates(
-        new_sigs, corpus_sigs, id_col, num_hashes, bands, max_bucket_size,
-        pre_collapsed, content_col="whashes")
-    new_wh = new_sigs.select(F.col(id_col).alias("new_id"),
-                             F.col("whashes").alias("wh_new"))
-    corpus_wh = corpus_sigs.select(F.col(id_col).alias("corpus_id"),
-                                   F.col("whashes").alias("wh_corpus"))
-    dup_ids = (
-        cand.join(new_wh, "new_id")
-        .join(corpus_wh, "corpus_id")
-        .filter(weighted_jaccard_of(
-            F.col("wh_new"), F.col("wh_corpus")) >= threshold)
-        .select(F.col("new_id").alias(id_col))
-        .distinct()
-    )
-    # same drop-list + signature-reuse shape as the set path: one
-    # id-only checkpoint gates docs AND the batch signatures, so the
-    # within-batch dedup skips its second ICWS signing pass. Same
-    # laziness split as the set path: dup_ids/fresh materialize inside
-    # fresh_sigs' eager job / the final anti-join; fresh_sigs stays
-    # EAGER (band + verify fan-out race, unpersist ordering).
-    dup_ids = dup_ids.localCheckpoint(eager=False)
-    fresh = new_docs.join(dup_ids, on=id_col, how="left_anti")
-    fresh = fresh.localCheckpoint(eager=False)
-    fresh_sigs = new_sigs.join(dup_ids, on=id_col, how="left_anti") \
-        .localCheckpoint(eager=True)
-    new_sigs.unpersist()
-    if own_corpus_sigs:
-        corpus_sigs.unpersist()
-    return weighted_minhash_dedup(fresh, text_col, id_col, threshold,
-                                  num_hashes, bands, shingle_size,
-                                  sigs=fresh_sigs)
+    exact Σmin/Σmax verification; every argument keeps the set path's
+    contract (``corpus_sigs`` from ``build_weighted_minhash_index``)."""
+    return _incremental_dedup(
+        _WEIGHTED, new_docs, corpus, text_col, id_col, threshold, num_hashes,
+        bands, shingle_size, max_bucket_size, corpus_sigs, pre_collapsed)
 
 
 def clone_representatives(
@@ -994,9 +856,8 @@ def build_minhash_index(
     shingle sets). Append a batch's surviving rows' signatures after
     each ingest and the table stays current. Feed it to
     ``incremental_minhash_dedup(corpus_sigs=...)``."""
-    sigs = minhash_signatures(corpus, text_col, id_col,
-                              num_hashes, shingle_size)
-    return collapse_clones(sigs, id_col, "shingles")
+    return _build_index(_SET, corpus, text_col, id_col, num_hashes,
+                        shingle_size)
 
 
 def incremental_minhash_candidates(
@@ -1013,10 +874,8 @@ def incremental_minhash_candidates(
     ``incremental_minhash_dedup`` from precomputed signature frames —
     factored out so tests can pin the candidate-count bound (the
     ``incremental_semantic_dedup_candidates`` precedent).
-    ``content_col`` names the set/multiset column backing the
-    clone-collapse key — "shingles" for the set path, "whashes" for
-    the ICWS weighted path (byte-identical multisets have identical
-    weighted Jaccard to any probe, so the collapse stays lossless).
+    ``content_col`` keys the clone collapse: the family's
+    ``_SigFamily.content_col``.
 
     Guarded (``max_bucket_size``), two stages mirroring the SemDeDup
     incremental guard:
@@ -1078,15 +937,12 @@ def incremental_minhash_dedup(
     continuously and must not re-cluster 100 TB per batch.
 
     The corpus never self-joins: its signatures band to compact
-    ``(id, band, bucket)`` keys (in production these live as a persisted
-    signature table — pass it via ``corpus_sigs``, built once with
-    ``build_minhash_index``, and the ``corpus`` argument is never
-    touched; without it signatures recompute from ``corpus`` per
-    call), and the batch's band keys probe
-    them with a plain equi-join. Candidates verify with exact Jaccard on
-    the shingle sets, joined back by id so wide arrays move only for
-    survivors — the same slim-join discipline as
-    ``minhash_candidate_pairs``. A batch doc at/above ``threshold``
+    ``(id, band, bucket)`` keys (in production a persisted signature
+    table, built once with ``build_minhash_index`` and passed via
+    ``corpus_sigs`` — ``corpus`` is then never touched), and the
+    batch's band keys probe them with a plain equi-join. Candidates
+    verify with exact Jaccard on the shingle sets, joined back by id so
+    wide arrays move only for survivors. A batch doc at/above ``threshold``
     against ANY corpus doc is dropped; batch-internal duplicates are
     then removed with ``minhash_dedup`` over the survivors, so the
     returned frame is clean against corpus ∪ itself (append it and the
@@ -1110,71 +966,211 @@ def incremental_minhash_dedup(
     A caller-provided ``corpus_sigs`` MUST be deterministic (e.g.
     parquet-backed, as a persisted index is) or already
     persisted/checkpointed: it is read by BOTH the band probe and the
-    shingle verify join-back, and an uncached nondeterministic frame
-    can recompute differently per consumer (the fan-out race the
-    internal persist+count guards against for signatures derived
-    here — the operator deliberately does NOT persist a caller-owned
-    index, so the lifecycle stays with the caller)."""
-    new_sigs = minhash_signatures(
-        new_docs, text_col, id_col, num_hashes, shingle_size).persist()
+    verify join-back, and the operator never persists or releases a
+    caller-owned index (``_corpus_probe``)."""
+    return _incremental_dedup(
+        _SET, new_docs, corpus, text_col, id_col, threshold, num_hashes,
+        bands, shingle_size, max_bucket_size, corpus_sigs, pre_collapsed)
+
+
+# ---------------------------------------------------------------------------
+# One body per MinHash operation, parameterised by signature family
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class _SigFamily:
+    """What the set and weighted MinHash families differ in. Every
+    operation below is written once over this record.
+
+    The family's public functions are held by NAME and called through
+    this module's globals (``call``): a rebound module attribute (a
+    tracing wrapper) must see the calls made from the shared bodies,
+    which a function object captured at import would bypass."""
+
+    signer: str        # (id, content_col, signature) builder
+    candidates: str
+    dedup: str
+    build_index: str
+    incremental: str
+    content_col: str   # set / multiset the exact verify reads
+    verify: Callable[[Column, Column], Column]
+    sim_col: str       # similarity column of the candidate pairs
+    tag: str           # prefix of the verify join-back columns
+
+    def call(self, fn: str, *args, **kwargs):
+        """Call the public function named by field ``fn``."""
+        return globals()[getattr(self, fn)](*args, **kwargs)
+
+
+_SET = _SigFamily(
+    signer="minhash_signatures", candidates="minhash_candidate_pairs",
+    dedup="minhash_dedup", build_index="build_minhash_index",
+    incremental="incremental_minhash_dedup", content_col="shingles",
+    verify=jaccard, sim_col="jaccard_sim", tag="sh")
+_WEIGHTED = _SigFamily(
+    signer="weighted_minhash_signatures",
+    candidates="weighted_minhash_candidate_pairs",
+    dedup="weighted_minhash_dedup",
+    build_index="build_weighted_minhash_index",
+    incremental="incremental_weighted_minhash_dedup", content_col="whashes",
+    verify=weighted_jaccard_of, sim_col="weighted_jaccard_sim", tag="wh")
+
+
+def _candidate_pairs(fam, df, text_col, id_col, num_hashes, bands,
+                     shingle_size, max_bucket_size, sigs):
+    """Body of ``minhash_candidate_pairs`` and its weighted twin."""
+    own_sigs = sigs is None
+    if own_sigs:
+        sigs = fam.call("signer", df, text_col, id_col, num_hashes,
+                        shingle_size).persist()
+    try:
+        if own_sigs:
+            # One pass computes content + signatures; both the band join
+            # and the verify join-back reuse it. At cluster scale this
+            # would be a persisted intermediate table; locally an eager
+            # cache plays that role. The count() is load-bearing:
+            # persist() is lazy, and the band self-join fans out into TWO
+            # scans of sigs — tasks racing on not-yet-cached partitions
+            # each recompute the full signature pipeline (measured 22s vs
+            # 8s at sf0.1). Materializing once before fan-out removes the
+            # race.
+            sigs.count()
+        banded = _band_keys(sigs, id_col, num_hashes, bands)
+        if max_bucket_size is not None:  # the m² skew cap
+            banded = (
+                banded.withColumn("__bsz", F.count(F.lit(1)).over(
+                    Window.partitionBy("band", "bucket")))
+                .filter(F.col("__bsz") <= max_bucket_size)
+                .drop("__bsz")
+            )
+        pairs = band_candidate_pairs(banded, id_col)
+        content = sigs.select(F.col(id_col), F.col(fam.content_col))
+        a, b = f"{fam.tag}_a", f"{fam.tag}_b"
+        out = (
+            pairs.join(content.withColumnRenamed(id_col, "id_a")
+                       .withColumnRenamed(fam.content_col, a), "id_a")
+            .join(content.withColumnRenamed(id_col, "id_b")
+                  .withColumnRenamed(fam.content_col, b), "id_b")
+            .select("id_a", "id_b",
+                    fam.verify(F.col(a), F.col(b)).alias(fam.sim_col))
+        )
+        # Materialize the result before releasing the cached signatures:
+        # a long-lived session running the whole catalog would
+        # otherwise accumulate cached blocks across calls.
+        return out.localCheckpoint(eager=True)
+    finally:
+        if own_sigs:
+            sigs.unpersist()
+
+
+def _dedup(fam, df, text_col, id_col, threshold, num_hashes, bands,
+           shingle_size, max_bucket_size, sigs):
+    """Body of ``minhash_dedup`` and its weighted twin."""
+    from pyspark_deduplication_spark.operators.linkage import connected_components
+
+    edges = fam.call(
+        "candidates", df, text_col, id_col, num_hashes, bands, shingle_size,
+        max_bucket_size=max_bucket_size, sigs=sigs,
+    ).filter(F.col(fam.sim_col) >= threshold)
+    comps = connected_components(edges, "id_a", "id_b")  # (node, component)
+    losers = comps.filter(F.col("node") != F.col("component")).select(
+        F.col("node").alias(id_col)
+    )
+    return df.join(losers, on=id_col, how="left_anti")
+
+
+def _build_index(fam, corpus, text_col, id_col, num_hashes, shingle_size):
+    """Body of ``build_minhash_index`` and its weighted twin."""
+    sigs = fam.call("signer", corpus, text_col, id_col, num_hashes,
+                    shingle_size)
+    return collapse_clones(sigs, id_col, fam.content_col)
+
+
+@contextmanager
+def _corpus_probe(fam, new_docs, corpus, corpus_sigs, text_col, id_col,
+                  threshold, num_hashes, bands, shingle_size,
+                  max_bucket_size, pre_collapsed):
+    """The corpus-probe stage shared by the incremental and fused
+    operators: sign the batch, sign ``corpus`` unless ``corpus_sigs``
+    (a persisted index) is given, band-probe the corpus
+    (``incremental_minhash_candidates``) and verify exactly by id
+    join-back. Yields ``(pairs, new_sigs)``: lazy verified
+    ``(new_id, corpus_id)`` rows, and the cached batch signatures for
+    the caller's survivor filter.
+
+    Caches live for the ``with`` block — materialize what reads them
+    before it ends. Only frames derived HERE are persisted and released:
+    a caller-provided index stays cached (evicting a train-once index
+    would force every later ingest batch to re-materialize it)."""
+    new_sigs = fam.call("signer", new_docs, text_col, id_col, num_hashes,
+                        shingle_size).persist()
+    own_corpus_sigs = corpus_sigs is None
+    try:
+        # eager: both frames are read by the band probe AND the verify
+        # join-back — see the fan-out race note in _candidate_pairs.
+        # Both caches materialize in ONE action (count over the union
+        # computes each persisted child and stores its blocks as a side
+        # effect) instead of one job per frame.
+        if own_corpus_sigs:
+            corpus_sigs = fam.call("signer", corpus, text_col, id_col,
+                                   num_hashes, shingle_size).persist()
+            new_sigs.unionByName(corpus_sigs).count()
+        else:
+            new_sigs.count()
+        cand = incremental_minhash_candidates(
+            new_sigs, corpus_sigs, id_col, num_hashes, bands,
+            max_bucket_size, pre_collapsed, fam.content_col)
+        new_c, corpus_c = f"{fam.tag}_new", f"{fam.tag}_corpus"
+        yield (
+            cand.join(new_sigs.select(F.col(id_col).alias("new_id"),
+                                      F.col(fam.content_col).alias(new_c)),
+                      "new_id")
+            .join(corpus_sigs.select(F.col(id_col).alias("corpus_id"),
+                                     F.col(fam.content_col).alias(corpus_c)),
+                  "corpus_id")
+            .filter(fam.verify(F.col(new_c), F.col(corpus_c)) >= threshold)
+            .select("new_id", "corpus_id")
+        ), new_sigs
+    finally:
+        new_sigs.unpersist()
+        if own_corpus_sigs and corpus_sigs is not None:
+            corpus_sigs.unpersist()
+
+
+def _incremental_dedup(fam, new_docs, corpus, text_col, id_col, threshold,
+                       num_hashes, bands, shingle_size, max_bucket_size,
+                       corpus_sigs, pre_collapsed):
+    """Body of ``incremental_minhash_dedup`` and its weighted twin."""
     if pre_collapsed is None:
         pre_collapsed = corpus_sigs is not None
-    # caller-owned lifecycle: only frames derived HERE get persisted /
-    # unpersisted — evicting a caller-provided train-once index would
-    # force every later ingest batch to re-materialize it
-    own_corpus_sigs = corpus_sigs is None
-    # eager: both frames are read by the band probe AND the shingle
-    # join-back — see the fan-out race note in minhash_candidate_pairs.
-    # Both caches materialize in ONE action (count over the union
-    # computes each persisted child and stores its blocks as a side
-    # effect) instead of one job per frame.
-    if own_corpus_sigs:
-        corpus_sigs = minhash_signatures(
-            corpus, text_col, id_col, num_hashes, shingle_size).persist()
-        new_sigs.unionByName(corpus_sigs).count()
-    else:
-        new_sigs.count()
-    cand = incremental_minhash_candidates(
-        new_sigs, corpus_sigs, id_col, num_hashes, bands, max_bucket_size,
-        pre_collapsed)
-    new_sh = new_sigs.select(F.col(id_col).alias("new_id"),
-                             F.col("shingles").alias("sh_new"))
-    corpus_sh = corpus_sigs.select(F.col(id_col).alias("corpus_id"),
-                                   F.col("shingles").alias("sh_corpus"))
-    dup_ids = (
-        cand.join(new_sh, "new_id")
-        .join(corpus_sh, "corpus_id")
-        .filter(jaccard(F.col("sh_new"), F.col("sh_corpus")) >= threshold)
-        .select(F.col("new_id").alias(id_col))
-        .distinct()
-    )
-    # Materialize the drop list once: it gates BOTH the surviving docs
-    # and their already-computed signatures (ids only — model-state
-    # sized next to the shingle frames it filters). Lazy: fresh_sigs'
-    # EAGER checkpoint below is the first action over it and stores
-    # the blocks as a side effect (one action instead of three for
-    # the whole drop-list/survivor trio — the CC-loop lesson).
-    dup_ids = dup_ids.localCheckpoint(eager=False)
-    fresh = new_docs.join(dup_ids, on=id_col, how="left_anti")
-    # lazy too: consumed exactly once, by minhash_dedup's final
-    # anti-join (its band/verify work reads fresh_sigs, not fresh)
-    fresh = fresh.localCheckpoint(eager=False)
-    # Survivors' signatures are a filter over the batch signatures
-    # computed above — reusing them saves the second full signing pass
-    # (normalize + shingle + hash over every surviving row) the old
-    # spelling paid inside minhash_dedup. EAGER is load-bearing here:
-    # fresh_sigs fans out to the band self-join AND the shingle
-    # verify join-back inside one job (the not-yet-cached-partition
-    # race measured at 22s vs 8s), and new_sigs.unpersist() below must
-    # not evict blocks a lazy checkpoint still needs.
-    fresh_sigs = new_sigs.join(dup_ids, on=id_col, how="left_anti") \
-        .localCheckpoint(eager=True)
-    new_sigs.unpersist()
-    if own_corpus_sigs:
-        corpus_sigs.unpersist()
-    return minhash_dedup(fresh, text_col, id_col, threshold,
-                         num_hashes, bands, shingle_size,
-                         sigs=fresh_sigs)
+    with _corpus_probe(fam, new_docs, corpus, corpus_sigs, text_col, id_col,
+                       threshold, num_hashes, bands, shingle_size,
+                       max_bucket_size, pre_collapsed) as (pairs, new_sigs):
+        # Materialize the drop list once: it gates BOTH the surviving
+        # docs and their already-computed signatures (ids only —
+        # model-state sized next to the content frames it filters).
+        # Lazy: fresh_sigs' EAGER checkpoint below is the first action
+        # over it and stores the blocks as a side effect (one action
+        # instead of three for the whole drop-list/survivor trio — the
+        # CC-loop lesson).
+        dup_ids = pairs.select(F.col("new_id").alias(id_col)).distinct() \
+            .localCheckpoint(eager=False)
+        # lazy too: consumed exactly once, by the dedup's final anti-join
+        # (its band/verify work reads fresh_sigs, not fresh)
+        fresh = new_docs.join(dup_ids, on=id_col, how="left_anti") \
+            .localCheckpoint(eager=False)
+        # Survivors' signatures are a filter over the batch signatures
+        # computed above, which saves a second full signing pass over
+        # every surviving row. EAGER is load-bearing here: fresh_sigs
+        # fans out to the band self-join AND the verify join-back inside
+        # one job (the not-yet-cached-partition race measured at 22s vs
+        # 8s), and leaving the probe releases new_sigs, whose blocks a
+        # lazy checkpoint would still need.
+        fresh_sigs = new_sigs.join(dup_ids, on=id_col, how="left_anti") \
+            .localCheckpoint(eager=True)
+    return fam.call("dedup", fresh, text_col, id_col, threshold, num_hashes,
+                    bands, shingle_size, sigs=fresh_sigs)
 
 
 # ---------------------------------------------------------------------------

@@ -35,20 +35,18 @@ nested — each catches pairs the other scores near zero).
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyspark_deduplication_spark.functions.similarity import jaccard
+from pyspark_deduplication_spark.functions.vectors import cosine_similarity_pd
 from pyspark_deduplication_spark.operators.dedup import (
-    incremental_minhash_candidates,
-    minhash_candidate_pairs,
-    minhash_signatures,
-    weighted_jaccard_of,
-    weighted_minhash_candidate_pairs,
-    weighted_minhash_signatures,
+    _SET,
+    _WEIGHTED,
+    _corpus_probe,
 )
 from pyspark_deduplication_spark.operators.knn import (
-    _semantic_hit_ids,
     incremental_semantic_dedup_candidates,
     semantic_dedup_edges,
 )
@@ -91,10 +89,13 @@ def fused_dedup_edges(
     ``max_cell_size``) forward to their legs — the weighted leg shares
     the banding machinery and hence the same clone-collapse/cap guard.
     Only bare id pairs move through the union."""
-    lex = minhash_candidate_pairs(
-        batch, text_col, id_col, num_hashes, bands, shingle_size,
-        max_bucket_size, sigs=sigs,
-    ).filter(F.col("jaccard_sim") >= jaccard_threshold).select("id_a", "id_b")
+    def minhash_edges(fam, threshold, fam_sigs):
+        return fam.call(
+            "candidates", batch, text_col, id_col, num_hashes, bands,
+            shingle_size, max_bucket_size, sigs=fam_sigs,
+        ).filter(F.col(fam.sim_col) >= threshold).select("id_a", "id_b")
+
+    lex = minhash_edges(_SET, jaccard_threshold, sigs)
     sem = semantic_dedup_edges(
         batch.select(F.col(id_col), F.col(vec_col)), cosine_threshold,
         n_cells, id_col, vec_col, n_iter, n_probe, train_sample_mod,
@@ -102,12 +103,8 @@ def fused_dedup_edges(
     ).select("id_a", "id_b")
     edges = lex.unionByName(sem)
     if weighted_threshold is not None:
-        wtd = weighted_minhash_candidate_pairs(
-            batch, text_col, id_col, num_hashes, bands, shingle_size,
-            max_bucket_size, sigs=wsigs,
-        ).filter(F.col("weighted_jaccard_sim") >= weighted_threshold) \
-            .select("id_a", "id_b")
-        edges = edges.unionByName(wtd)
+        edges = edges.unionByName(
+            minhash_edges(_WEIGHTED, weighted_threshold, wsigs))
     return edges.dropDuplicates(["id_a", "id_b"])
 
 
@@ -210,128 +207,30 @@ def incremental_fused_dedup(
     ``build_weighted_minhash_index`` table.
 
     Returns the surviving rows of ``new_batch`` (all columns)."""
-    if corpus is None and (minhash_index is None or semantic_index is None):
-        raise ValueError(
-            "incremental_fused_dedup: corpus=None requires BOTH "
-            "minhash_index and semantic_index")
-    if (corpus is None and weighted_threshold is not None
-            and weighted_index is None):
-        raise ValueError(
-            "incremental_fused_dedup: corpus=None with the weighted leg "
-            "armed requires weighted_index")
-
-    # -- lexical corpus probe (incremental_minhash_dedup's probe stage) --
-    new_sigs = minhash_signatures(
-        new_batch, text_col, id_col, num_hashes, shingle_size).persist()
-    pre_collapsed = minhash_index is not None
-    own_corpus_sigs = minhash_index is None
-    corpus_sigs = minhash_index
-    if corpus_sigs is None:
-        # only frames derived HERE get persisted/unpersisted — a passed
-        # minhash_index is caller-owned (the train-once reuse shape:
-        # evicting it would force every later batch to rebuild the
-        # corpus-sized signature cache; same lifecycle rule as
-        # minhash_candidate_pairs' sigs= contract)
-        corpus_sigs = minhash_signatures(
-            corpus, text_col, id_col, num_hashes, shingle_size).persist()
-    # eager: both frames are read by the band probe AND the shingle
-    # join-back — see the fan-out race note in minhash_candidate_pairs
-    new_sigs.count()
-    if own_corpus_sigs:
-        corpus_sigs.count()
-    cand = incremental_minhash_candidates(
-        new_sigs, corpus_sigs, id_col, num_hashes, bands, max_bucket_size,
-        pre_collapsed)
-    new_sh = new_sigs.select(F.col(id_col).alias("new_id"),
-                             F.col("shingles").alias("sh_new"))
-    corpus_sh = corpus_sigs.select(F.col(id_col).alias("corpus_id"),
-                                   F.col("shingles").alias("sh_corpus"))
-    lex_hits = (
-        cand.join(new_sh, "new_id")
-        .join(corpus_sh, "corpus_id")
-        .filter(jaccard(F.col("sh_new"), F.col("sh_corpus"))
-                >= jaccard_threshold)
-        .select(F.col("new_id").alias(id_col))
-        .distinct()
-    )
-
-    # -- semantic corpus probe (incremental_semantic_dedup's probe stage)
-    sem_cand = incremental_semantic_dedup_candidates(
-        new_batch.select(F.col(id_col), F.col(vec_col)),
-        None if corpus is None
-        else corpus.select(F.col(id_col), F.col(vec_col)),
-        n_cells, id_col, vec_col, n_iter, n_probe, train_sample_mod,
-        max_cell_size, semantic_index,
-    )
-    sem_hits = _semantic_hit_ids(sem_cand, cosine_threshold, id_col)
-    all_hits = lex_hits.unionByName(sem_hits)
-
-    # -- weighted corpus probe (incremental_weighted_minhash_dedup's
-    # probe stage; shares the banded candidate machinery via
-    # content_col="whashes") --------------------------------------------
-    new_wsigs = None
-    own_corpus_wsigs = False
-    corpus_wsigs = weighted_index
-    if weighted_threshold is not None:
-        new_wsigs = weighted_minhash_signatures(
-            new_batch, text_col, id_col, num_hashes, shingle_size).persist()
-        w_pre_collapsed = weighted_index is not None
-        own_corpus_wsigs = weighted_index is None
-        if corpus_wsigs is None:
-            corpus_wsigs = weighted_minhash_signatures(
-                corpus, text_col, id_col, num_hashes,
-                shingle_size).persist()
-        new_wsigs.count()
-        if own_corpus_wsigs:
-            corpus_wsigs.count()
-        wcand = incremental_minhash_candidates(
-            new_wsigs, corpus_wsigs, id_col, num_hashes, bands,
-            max_bucket_size, w_pre_collapsed, content_col="whashes")
-        new_wh = new_wsigs.select(F.col(id_col).alias("new_id"),
-                                  F.col("whashes").alias("wh_new"))
-        corpus_wh = corpus_wsigs.select(F.col(id_col).alias("corpus_id"),
-                                        F.col("whashes").alias("wh_corpus"))
-        wtd_hits = (
-            wcand.join(new_wh, "new_id")
-            .join(corpus_wh, "corpus_id")
-            .filter(weighted_jaccard_of(F.col("wh_new"),
-                                        F.col("wh_corpus"))
-                    >= weighted_threshold)
-            .select(F.col("new_id").alias(id_col))
-            .distinct()
-        )
-        all_hits = all_hits.unionByName(wtd_hits)
-
-    # Materialize the bare hit-id set ONCE before it fans out into the
-    # anti-joins below — without this, each eager localCheckpoint
-    # re-executes the whole lexical AND semantic (AND weighted) corpus
-    # probe (band join, Jaccard verify, cell assignment, Arrow cosine)
-    # a second time; dup_ids is ids only, so the checkpoint is tiny.
-    dup_ids = all_hits.distinct().localCheckpoint(eager=True)
-    fresh = new_batch.join(dup_ids, id_col, "left_anti")
-    # Materialize the survivor set before the fused self-collapse fans
-    # out into the edge legs (and before releasing the signature caches).
-    fresh = fresh.localCheckpoint(eager=True)
-    dropped = dup_ids.withColumnRenamed(id_col, "__dropped")
-    fresh_sigs = (
-        new_sigs.join(dropped, new_sigs[id_col] == F.col("__dropped"),
-                      "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    fresh_wsigs = None
-    if new_wsigs is not None:
-        fresh_wsigs = (
-            new_wsigs.join(dropped,
-                           new_wsigs[id_col] == F.col("__dropped"),
-                           "left_anti")
+    with ExitStack() as stack:
+        pairs, new_sigs, new_wsigs = _fused_corpus_pairs(
+            stack, "incremental_fused_dedup", new_batch, corpus, id_col,
+            text_col, vec_col, jaccard_threshold, cosine_threshold,
+            num_hashes, bands, shingle_size, max_bucket_size, n_cells,
+            n_iter, n_probe, train_sample_mod, max_cell_size, minhash_index,
+            semantic_index, weighted_threshold, weighted_index)
+        # Materialize the bare hit-id set ONCE before it fans out into the
+        # anti-joins below — without this, each eager localCheckpoint
+        # re-executes the whole lexical AND semantic (AND weighted) corpus
+        # probe (band join, Jaccard verify, cell assignment, Arrow cosine)
+        # a second time; dup_ids is ids only, so the checkpoint is tiny.
+        dup_ids = pairs.select(F.col("new_id").alias(id_col)).distinct() \
             .localCheckpoint(eager=True)
-        )
-        new_wsigs.unpersist()
-    if own_corpus_wsigs:
-        corpus_wsigs.unpersist()
-    new_sigs.unpersist()
-    if own_corpus_sigs:
-        corpus_sigs.unpersist()
+
+        # Materialize the survivor set and its signatures before the fused
+        # self-collapse fans out into the edge legs (and before leaving
+        # the block releases the signature caches).
+        def survivors(df):
+            return df.join(dup_ids, id_col, "left_anti") \
+                .localCheckpoint(eager=True)
+
+        fresh, fresh_sigs = survivors(new_batch), survivors(new_sigs)
+        fresh_wsigs = None if new_wsigs is None else survivors(new_wsigs)
 
     # -- batch-internal fused collapse ---------------------------------
     keep = fused_dedup(
@@ -382,42 +281,49 @@ def incremental_fused_match_pairs(
     corpus never self-joins. The returned frame is eagerly
     materialized (ids only — tiny), so callers may fan it out freely.
     """
+    with ExitStack() as stack:
+        pairs, _, _ = _fused_corpus_pairs(
+            stack, "incremental_fused_match_pairs", new_batch, corpus,
+            id_col, text_col, vec_col, jaccard_threshold, cosine_threshold,
+            num_hashes, bands, shingle_size, max_bucket_size, n_cells,
+            n_iter, n_probe, train_sample_mod, max_cell_size, minhash_index,
+            semantic_index, weighted_threshold, weighted_index)
+        # eager ids-only materialization BEFORE the signature caches are
+        # released (the dup_ids discipline in incremental_fused_dedup)
+        return pairs.distinct().localCheckpoint(eager=True)
+
+
+def _fused_corpus_pairs(
+    stack: ExitStack, caller: str, new_batch, corpus, id_col, text_col,
+    vec_col, jaccard_threshold, cosine_threshold, num_hashes, bands,
+    shingle_size, max_bucket_size, n_cells, n_iter, n_probe,
+    train_sample_mod, max_cell_size, minhash_index, semantic_index,
+    weighted_threshold, weighted_index,
+):
+    """The corpus probe of both incremental fused operators: lazy
+    ``(new_id, corpus_id)`` rows (not distinct) from every armed leg,
+    plus the lexical and weighted legs' cached batch signatures
+    ``(new_sigs, new_wsigs)`` — ``new_wsigs`` is None with the weighted
+    leg off. The MinHash legs are ``dedup._corpus_probe`` blocks entered
+    on ``stack``, so their caches live until the caller closes it; a
+    passed index is caller-owned and never released."""
     if corpus is None and (minhash_index is None or semantic_index is None):
         raise ValueError(
-            "incremental_fused_match_pairs: corpus=None requires BOTH "
-            "minhash_index and semantic_index")
+            f"{caller}: corpus=None requires BOTH minhash_index and "
+            "semantic_index")
     if (corpus is None and weighted_threshold is not None
             and weighted_index is None):
         raise ValueError(
-            "incremental_fused_match_pairs: corpus=None with the "
-            "weighted leg armed requires weighted_index")
+            f"{caller}: corpus=None with the weighted leg armed requires "
+            "weighted_index")
 
-    new_sigs = minhash_signatures(
-        new_batch, text_col, id_col, num_hashes, shingle_size).persist()
-    pre_collapsed = minhash_index is not None
-    own_corpus_sigs = minhash_index is None
-    corpus_sigs = minhash_index
-    if corpus_sigs is None:
-        corpus_sigs = minhash_signatures(
-            corpus, text_col, id_col, num_hashes, shingle_size).persist()
-    new_sigs.count()
-    if own_corpus_sigs:
-        corpus_sigs.count()
-    cand = incremental_minhash_candidates(
-        new_sigs, corpus_sigs, id_col, num_hashes, bands, max_bucket_size,
-        pre_collapsed)
-    new_sh = new_sigs.select(F.col(id_col).alias("new_id"),
-                             F.col("shingles").alias("sh_new"))
-    corpus_sh = corpus_sigs.select(F.col(id_col).alias("corpus_id"),
-                                   F.col("shingles").alias("sh_corpus"))
-    pairs = (
-        cand.join(new_sh, "new_id")
-        .join(corpus_sh, "corpus_id")
-        .filter(jaccard(F.col("sh_new"), F.col("sh_corpus"))
-                >= jaccard_threshold)
-        .select("new_id", "corpus_id")
-    )
+    def probe(fam, index, threshold):
+        return stack.enter_context(_corpus_probe(
+            fam, new_batch, corpus, index, text_col, id_col, threshold,
+            num_hashes, bands, shingle_size, max_bucket_size,
+            index is not None))
 
+    pairs, new_sigs = probe(_SET, minhash_index, jaccard_threshold)
     sem_cand = incremental_semantic_dedup_candidates(
         new_batch.select(F.col(id_col), F.col(vec_col)),
         None if corpus is None
@@ -425,59 +331,15 @@ def incremental_fused_match_pairs(
         n_cells, id_col, vec_col, n_iter, n_probe, train_sample_mod,
         max_cell_size, semantic_index,
     )
-    from pyspark_deduplication_spark.functions.vectors import (
-        cosine_similarity_pd,
-    )
-
-    sem_pairs = (
+    pairs = pairs.unionByName(
         sem_cand.filter(
             cosine_similarity_pd(F.col("__nvec"), F.col("__cvec"))
             >= cosine_threshold)
         .select(F.col("__nid").alias("new_id"),
-                F.col("__cid").alias("corpus_id"))
-    )
-    pairs = pairs.unionByName(sem_pairs)
-
+                F.col("__cid").alias("corpus_id")))
     new_wsigs = None
-    own_corpus_wsigs = False
-    corpus_wsigs = weighted_index
     if weighted_threshold is not None:
-        new_wsigs = weighted_minhash_signatures(
-            new_batch, text_col, id_col, num_hashes, shingle_size).persist()
-        w_pre_collapsed = weighted_index is not None
-        own_corpus_wsigs = weighted_index is None
-        if corpus_wsigs is None:
-            corpus_wsigs = weighted_minhash_signatures(
-                corpus, text_col, id_col, num_hashes,
-                shingle_size).persist()
-        new_wsigs.count()
-        if own_corpus_wsigs:
-            corpus_wsigs.count()
-        wcand = incremental_minhash_candidates(
-            new_wsigs, corpus_wsigs, id_col, num_hashes, bands,
-            max_bucket_size, w_pre_collapsed, content_col="whashes")
-        new_wh = new_wsigs.select(F.col(id_col).alias("new_id"),
-                                  F.col("whashes").alias("wh_new"))
-        corpus_wh = corpus_wsigs.select(F.col(id_col).alias("corpus_id"),
-                                        F.col("whashes").alias("wh_corpus"))
-        wtd_pairs = (
-            wcand.join(new_wh, "new_id")
-            .join(corpus_wh, "corpus_id")
-            .filter(weighted_jaccard_of(F.col("wh_new"),
-                                        F.col("wh_corpus"))
-                    >= weighted_threshold)
-            .select("new_id", "corpus_id")
-        )
-        pairs = pairs.unionByName(wtd_pairs)
-
-    # eager ids-only materialization BEFORE releasing the signature
-    # caches (the dup_ids discipline in incremental_fused_dedup)
-    out = pairs.distinct().localCheckpoint(eager=True)
-    if new_wsigs is not None:
-        new_wsigs.unpersist()
-    if own_corpus_wsigs:
-        corpus_wsigs.unpersist()
-    new_sigs.unpersist()
-    if own_corpus_sigs:
-        corpus_sigs.unpersist()
-    return out
+        wpairs, new_wsigs = probe(_WEIGHTED, weighted_index,
+                                  weighted_threshold)
+        pairs = pairs.unionByName(wpairs)
+    return pairs, new_sigs, new_wsigs

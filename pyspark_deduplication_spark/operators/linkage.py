@@ -320,7 +320,9 @@ def connected_components(
     pathological chain of length 10^6 would silently hit the iteration
     cap; with doubling the label distance-to-root halves each round, so
     convergence is O(log(diameter)) and 25 rounds cover any realistic
-    graph (2^25 diameter). Stop when no label changes.
+    graph (2^25 diameter). Stop when no label changes; a loop that
+    reaches ``max_iterations`` first returns its partial labels with a
+    ``RuntimeWarning``.
 
     Returns (node, component) with component = min node id reachable.
     Each round is one edge-join + union-fused min aggregation (the
@@ -424,6 +426,14 @@ def connected_components(
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
+    else:
+        warnings.warn(
+            f"connected_components stopped at max_iterations="
+            f"{max_iterations} before its labels converged; components "
+            "may be split",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     return labels
 
 

@@ -2353,7 +2353,6 @@ def lsh_recall_report_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     b ∈ {4, 8, 16} against the exact J ≥ 0.7 ground truth."""
     from pyspark_deduplication_spark.operators.dedup import (
         _minhash_signature,
-        band_candidate_pairs,
         ngram_index_pairs,
     )
 
@@ -2387,11 +2386,11 @@ def lsh_recall_report_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("signature")).persist()
     sigs.count()
 
-    rungs = []
-    for bands in (4, 8, 16):
-        rpb = 64 // bands
-        banded = sigs.select(
-            "doc_id",
+    def raw_slice_keys(sigs, id_col, num_hashes, bands):
+        # the bucket is the raw signature slice, joined as a string
+        rpb = num_hashes // bands
+        return sigs.select(
+            id_col,
             F.explode(F.array(*[
                 F.struct(
                     F.lit(b).alias("band"),
@@ -2401,31 +2400,13 @@ def lsh_recall_report_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ]).alias("bucket"))
                 for b in range(bands)
             ])).alias("bk"),
-        ).select("doc_id", "bk.band", "bk.bucket")
-        pairs = band_candidate_pairs(banded, "doc_id").localCheckpoint()
-        scored = truth.join(
-            pairs.withColumn("__hit", F.lit(1)), ["id_a", "id_b"], "left")
-        rungs.append(
-            scored.agg(
-                F.count(F.lit(1)).cast("long").alias("n_truth"),
-                F.coalesce(
-                    F.sum(F.coalesce(F.col("__hit"), F.lit(0))), F.lit(0))
-                .cast("long").alias("n_hit"))
-            .crossJoin(pairs.agg(F.count(F.lit(1)).cast("long")
-                                 .alias("n_candidates")))
-            .select(F.lit(bands).cast("long").alias("bands"),
-                    "n_candidates", "n_truth", "n_hit",
-                    F.when(F.col("n_truth") > 0,
-                           F.round(F.col("n_hit").cast("double")
-                                   / F.col("n_truth").cast("double"), 6))
-                    .alias("recall"))
-        )
+        ).select(id_col, "bk.band", "bk.bucket")
+
+    out = _band_recall_ladder(sigs, truth, "doc_id", 64, (4, 8, 16),
+                              raw_slice_keys)
     sh.unpersist()
     sigs.unpersist()
-    out = rungs[0]
-    for r in rungs[1:]:
-        out = out.unionByName(r)
-    return out.orderBy("bands")
+    return out
 
 
 _LSH_RECALL_MD5_ORACLE = f"""
@@ -2498,12 +2479,14 @@ ORDER BY bands
 """
 
 
-def _band_recall_ladder(sigs, truth, id_col, num_hashes, rung_bands):
+def _band_recall_ladder(sigs, truth, id_col, num_hashes, rung_bands,
+                        band_keys=None):
     """Score an LSH band ladder against an exact ground-truth pair
     set: per rung, (bands, n_candidates, n_truth, n_hit, recall) —
-    shared by the set-Jaccard and weighted-Jaccard recall reports.
-    Each rung shuffles only (id, band, bucket) keys; the recall join
-    moves bare id pairs."""
+    shared by the set-Jaccard, weighted-Jaccard and md5 recall reports.
+    ``band_keys(sigs, id_col, num_hashes, bands)`` builds each rung's
+    (id, band, bucket) keys, ``dedup._band_keys`` by default. Each rung
+    shuffles only those keys; the recall join moves bare id pairs."""
     from pyspark_deduplication_spark.operators.dedup import (
         _band_keys,
         band_candidate_pairs,
@@ -2512,7 +2495,8 @@ def _band_recall_ladder(sigs, truth, id_col, num_hashes, rung_bands):
     rungs = []
     for bands in rung_bands:
         cand = band_candidate_pairs(
-            _band_keys(sigs, id_col, num_hashes, bands), id_col
+            (band_keys or _band_keys)(sigs, id_col, num_hashes, bands),
+            id_col,
         ).localCheckpoint()
         scored = truth.join(
             cand.withColumn("__hit", F.lit(1)), ["id_a", "id_b"], "left")

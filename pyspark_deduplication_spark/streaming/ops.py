@@ -15,6 +15,8 @@ equivalents below.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -255,58 +257,71 @@ def _hadoop_delete_path(spark, path: str) -> None:
         fs.delete(jpath, True)
 
 
+def _heal_epoch_index(spark, corpus_dir: str, index_dir: str,
+                      corpus_epochs: set, epoch_id: int, id_col: str,
+                      build) -> None:
+    """Heal-before-trust for an epoch-partitioned index: an index
+    missing corpus epochs below this batch (deleted mid-history, or
+    newly enabled over an existing corpus) would silently admit those
+    epochs' near-dups forever, so ``build`` re-derives the uncovered
+    epochs' entries from their corpus rows. The entries are a pure
+    function of the rows, so a replay rewrites identical partitions."""
+    missing = corpus_epochs - {e for e in _epoch_partitions(spark, index_dir)
+                               if e < epoch_id}
+    if missing:
+        miss_rows = spark.read.parquet(corpus_dir).where(
+            F.col("epoch").isin(sorted(missing)))
+        (build(miss_rows.drop("epoch"))
+         .join(miss_rows.select(id_col, "epoch"), id_col)
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("epoch")
+         .parquet(index_dir))
+
+
 def _sig_indexed_dedup_ingest(
     batch_df: DataFrame,
     epoch_id: int,
     corpus_dir: str,
     sig_dir: str,
+    fam,
+    text_col: str,
     id_col: str,
+    threshold: float,
+    num_hashes: int,
+    bands: int,
+    max_bucket_size: int | None,
     maintain_sig_index: bool,
-    build_index,
-    incremental,
-    full,
 ) -> None:
     """Shared ``foreachBatch`` body of the MinHash / weighted-MinHash
-    corpus ingest loops (the two loops differ only in which signature
-    family they call — ``build_index(survivors)``,
-    ``incremental(batch, corpus, corpus_sigs)``, ``full(batch)``).
+    corpus ingest loops. The loops differ only in ``fam``, the signature
+    family record of ``operators.dedup`` (``_SET`` / ``_WEIGHTED``),
+    whose public operations this body calls: the family's index builder
+    over survivors and backfilled epochs, its incremental dedup against
+    the earlier epochs, and its batch dedup for the first epoch.
 
-    Epoch-coverage contract (advisory r8): the persisted signature
-    index is trusted ONLY when its epoch partitions cover every corpus
-    epoch below this batch. When the index is missing or BEHIND
-    (deleted mid-history, or ``maintain_sig_index`` newly enabled over
-    an existing multi-epoch corpus), this batch signs the uncovered
-    epochs' corpus rows once, BACKFILLS those signatures into the index
-    (dynamic per-epoch overwrite — idempotent on replay), and probes
-    the healed table; every later epoch then trusts a complete index
-    again. The pre-r9 spelling checked only that the index was
-    non-empty, so one fallback epoch rebuilt ``<corpus_dir>_sigs`` with
-    its OWN survivors and near-dups of all earlier epochs were admitted
-    forever after.
+    Epoch-coverage contract: the persisted signature index is trusted
+    ONLY when its epoch partitions cover every corpus epoch below this
+    batch; a missing or BEHIND index is backfilled first
+    (``_heal_epoch_index``) and the healed table probed, so every later
+    epoch trusts a complete index again. (Checking only that the
+    index is non-empty is not enough: one fallback epoch would rebuild
+    ``<corpus_dir>_sigs`` with its OWN survivors, and near-dups of all
+    earlier epochs would be admitted forever after.)
 
     Exactly-once: survivors (and their signatures) overwrite their own
     ``epoch=<id>`` partition, so a replayed micro-batch rewrites the
     identical partition instead of appending duplicates."""
+    def build_index(df):
+        return fam.call("build_index", df, text_col, id_col, num_hashes)
+
     spark = batch_df.sparkSession
     corpus_epochs = {e for e in _epoch_partitions(spark, corpus_dir)
                      if e < epoch_id}
     corpus, corpus_sigs = None, None
     if corpus_epochs and maintain_sig_index:
-        sig_epochs = {e for e in _epoch_partitions(spark, sig_dir)
-                      if e < epoch_id}
-        missing = corpus_epochs - sig_epochs
-        if missing:
-            # heal-before-trust: derive the missing epochs' signatures
-            # from their corpus rows (signatures are a pure function of
-            # the rows, so replay rewrites identical partitions)
-            miss_rows = spark.read.parquet(corpus_dir).where(
-                F.col("epoch").isin(sorted(missing)))
-            (build_index(miss_rows.drop("epoch"))
-             .join(miss_rows.select(id_col, "epoch"), id_col)
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("epoch")
-             .parquet(sig_dir))
+        _heal_epoch_index(spark, corpus_dir, sig_dir, corpus_epochs,
+                          epoch_id, id_col, build_index)
         # parquet-backed, hence deterministic — safe to feed unpersisted
         # to the incremental probe's fan-out (corpus_sigs contract)
         corpus_sigs = spark.read.parquet(sig_dir).where(
@@ -315,9 +330,13 @@ def _sig_indexed_dedup_ingest(
         corpus = spark.read.parquet(corpus_dir).where(
             F.col("epoch") < F.lit(epoch_id)).drop("epoch")
     if corpus_epochs:
-        fresh = incremental(batch_df, corpus, corpus_sigs)
+        fresh = fam.call("incremental", batch_df, corpus, text_col, id_col,
+                         threshold, num_hashes, bands,
+                         max_bucket_size=max_bucket_size,
+                         corpus_sigs=corpus_sigs)
     else:
-        fresh = full(batch_df)
+        fresh = fam.call("dedup", batch_df, text_col, id_col, threshold,
+                         num_hashes, bands)
     if maintain_sig_index:
         # one materialization feeds both epoch appends
         fresh = fresh.localCheckpoint(eager=True)
@@ -412,26 +431,15 @@ def streaming_corpus_ingest(
     pass ``max_bucket_size=None``; callers with heavier clone skew
     lower the cap.
     """
-    from pyspark_deduplication_spark.operators.dedup import (
-        build_minhash_index,
-        incremental_minhash_dedup,
-        minhash_dedup,
-    )
+    from pyspark_deduplication_spark.operators.dedup import _SET
 
     sig_dir = corpus_dir.rstrip("/") + "_sigs"
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
         _sig_indexed_dedup_ingest(
-            batch_df, epoch_id, corpus_dir, sig_dir, id_col,
-            maintain_sig_index,
-            build_index=lambda df: build_minhash_index(
-                df, text_col, id_col, num_hashes),
-            incremental=lambda b, c, cs: incremental_minhash_dedup(
-                b, c, text_col, id_col, threshold, num_hashes, bands,
-                max_bucket_size=max_bucket_size, corpus_sigs=cs),
-            full=lambda b: minhash_dedup(
-                b, text_col, id_col, threshold, num_hashes, bands),
-        )
+            batch_df, epoch_id, corpus_dir, sig_dir, _SET, text_col, id_col,
+            threshold, num_hashes, bands, max_bucket_size,
+            maintain_sig_index)
 
     return write_stream_foreach_batch(docs_stream, ingest, checkpoint_dir)
 
@@ -453,38 +461,20 @@ def streaming_weighted_corpus_ingest(
     corpora where set semantics are blind (boilerplate-repetition
     variants): each micro-batch dedups internally under generalized
     Jaccard, then drops docs whose Σmin/Σmax against ANY earlier epoch
-    reaches ``threshold`` (``incremental_weighted_minhash_dedup`` —
-    the standing corpus is probed by band key, never self-joined), and
-    survivors land as an epoch-partitioned parquet append. Same
-    exactly-once epoch-overwrite contract, same armed-by-default
-    multiset clone-collapse + bucket-cap guard and its recall trade as
-    the set-path loop, and the same ``maintain_sig_index`` contract:
-    survivors' ICWS signatures append per-epoch to
-    ``<corpus_dir>_wsigs`` (``build_weighted_minhash_index`` shape), so
-    later batches probe compact persisted signatures instead of
-    re-running the numpy ICWS kernel over the whole corpus — the
-    weighted kernel is the priciest signature stage in the family,
-    which makes the index MORE valuable here than on the set path."""
-    from pyspark_deduplication_spark.operators.dedup import (
-        build_weighted_minhash_index,
-        incremental_weighted_minhash_dedup,
-        weighted_minhash_dedup,
-    )
+    reaches ``threshold`` (``incremental_weighted_minhash_dedup``).
+    Exactly-once, the armed-by-default skew guard with its recall trade
+    and ``maintain_sig_index`` work as in the set-path loop; the index
+    is ``<corpus_dir>_wsigs``, and it matters MORE here, since the ICWS
+    kernel is the priciest signature stage in the family."""
+    from pyspark_deduplication_spark.operators.dedup import _WEIGHTED
 
     sig_dir = corpus_dir.rstrip("/") + "_wsigs"
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
         _sig_indexed_dedup_ingest(
-            batch_df, epoch_id, corpus_dir, sig_dir, id_col,
-            maintain_sig_index,
-            build_index=lambda df: build_weighted_minhash_index(
-                df, text_col, id_col, num_hashes),
-            incremental=lambda b, c, cs: incremental_weighted_minhash_dedup(
-                b, c, text_col, id_col, threshold, num_hashes, bands,
-                max_bucket_size=max_bucket_size, corpus_sigs=cs),
-            full=lambda b: weighted_minhash_dedup(
-                b, text_col, id_col, threshold, num_hashes, bands),
-        )
+            batch_df, epoch_id, corpus_dir, sig_dir, _WEIGHTED, text_col,
+            id_col, threshold, num_hashes, bands, max_bucket_size,
+            maintain_sig_index)
 
     return write_stream_foreach_batch(docs_stream, ingest, checkpoint_dir)
 
@@ -632,10 +622,7 @@ def fused_ingest_epoch(
     heal-before-trust, quality-aware insert/drop/replace, ghost
     detection, epoch appends — are documented on the streaming
     wrapper's docstring."""
-    from pyspark_deduplication_spark.operators.dedup import (
-        build_minhash_index,
-        build_weighted_minhash_index,
-    )
+    from pyspark_deduplication_spark.operators.dedup import _SET, _WEIGHTED
     from pyspark_deduplication_spark.operators.fused import (
         fused_dedup,
         incremental_fused_dedup,
@@ -651,7 +638,18 @@ def fused_ingest_epoch(
     cent_dir = base + "_centroids"
     idx_dir = base + "_index"
     wsig_dir = base + "_wsigs"
+    # signature index dir -> its MinHash family, one per armed leg
+    sig_legs = {sig_dir: _SET}
+    if weighted_threshold is not None:
+        sig_legs[wsig_dir] = _WEIGHTED
 
+    def sig_entries(fam, df: DataFrame) -> DataFrame:
+        return fam.call("build_index", df, text_col, id_col, num_hashes,
+                        shingle_size)
+
+    def cell_entries(df: DataFrame) -> DataFrame:
+        return assign_cells(df.select(F.col(id_col), F.col(vec_col)),
+                            cents, vec_col, 1)
 
     spark = batch_df.sparkSession
     if len(batch_df.take(1)) == 0:
@@ -665,55 +663,21 @@ def fused_ingest_epoch(
         corpus_epochs = {e for e in
                          _epoch_partitions(spark, corpus_dir)
                          if e < epoch_id}
-
-        def _heal(path: str, sign) -> None:
-            # heal-before-trust (the _sig_indexed_dedup_ingest
-            # contract, advisory r8): an index missing epochs the
-            # corpus has (deleted mid-history) would silently admit
-            # those epochs' near-dups forever — re-derive the
-            # uncovered epochs' entries from their corpus rows
-            # (pure function of the rows → idempotent on replay)
-            missing = corpus_epochs - {
-                e for e in _epoch_partitions(spark, path)
-                if e < epoch_id}
-            if missing:
-                miss_rows = spark.read.parquet(corpus_dir).where(
-                    F.col("epoch").isin(sorted(missing)))
-                (sign(miss_rows.drop("epoch"))
-                 .join(miss_rows.select(id_col, "epoch"), id_col)
-                 .write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("epoch")
-                 .parquet(path))
-
-        if corpus_epochs:
-            _heal(sig_dir, lambda df: build_minhash_index(
-                df, text_col, id_col, num_hashes, shingle_size))
-            _heal(idx_dir, lambda df: assign_cells(
-                df.select(F.col(id_col), F.col(vec_col)),
-                cents, vec_col, 1))
-            mh_idx = (spark.read.parquet(sig_dir)
-                      .where(F.col("epoch") < F.lit(epoch_id))
-                      .drop("epoch"))
-        else:
-            mh_idx = build_minhash_index(
-                batch_df, text_col, id_col, num_hashes,
-                shingle_size).limit(0)
-        w_idx = None
-        if weighted_threshold is not None:
+        sig_idx = {}
+        for path, fam in sig_legs.items():
             if corpus_epochs:
-                _heal(wsig_dir,
-                      lambda df: build_weighted_minhash_index(
-                          df, text_col, id_col, num_hashes,
-                          shingle_size))
-                w_idx = (spark.read.parquet(wsig_dir)
-                         .where(F.col("epoch") < F.lit(epoch_id))
-                         .drop("epoch"))
+                _heal_epoch_index(spark, corpus_dir, path, corpus_epochs,
+                                  epoch_id, id_col,
+                                  functools.partial(sig_entries, fam))
+                sig_idx[path] = (spark.read.parquet(path)
+                                 .where(F.col("epoch") < F.lit(epoch_id))
+                                 .drop("epoch"))
             else:
-                w_idx = build_weighted_minhash_index(
-                    batch_df, text_col, id_col, num_hashes,
-                    shingle_size).limit(0)
+                sig_idx[path] = sig_entries(fam, batch_df).limit(0)
+        mh_idx, w_idx = sig_idx[sig_dir], sig_idx.get(wsig_dir)
         if corpus_epochs:
+            _heal_epoch_index(spark, corpus_dir, idx_dir, corpus_epochs,
+                              epoch_id, id_col, cell_entries)
             sem_idx = (
                 spark.read.parquet(idx_dir)
                 .where(F.col("epoch") < F.lit(epoch_id))
@@ -881,10 +845,7 @@ def fused_ingest_epoch(
                       .select("corpus_id").distinct())
             ghost_eps: set[int] = set()
             if len(ghosts.take(1)) > 0:
-                idx_paths = [sig_dir, idx_dir] + (
-                    [wsig_dir] if weighted_threshold is not None
-                    else [])
-                for path in idx_paths:
+                for path in [*sig_legs, idx_dir]:
                     if not _hadoop_path_exists(spark, path):
                         continue
                     ge = (spark.read.parquet(path)
@@ -931,17 +892,9 @@ def fused_ingest_epoch(
                         _hadoop_delete_path(spark,
                                             f"{path}/epoch={e}")
 
-                _rederive(sig_dir, lambda df: build_minhash_index(
-                    df, text_col, id_col, num_hashes, shingle_size))
-                _rederive(idx_dir, lambda df: assign_cells(
-                    df.select(F.col(id_col), F.col(vec_col)),
-                    cents, vec_col, 1))
-                if weighted_threshold is not None:
-                    _rederive(
-                        wsig_dir,
-                        lambda df: build_weighted_minhash_index(
-                            df, text_col, id_col, num_hashes,
-                            shingle_size))
+                for path, fam in sig_legs.items():
+                    _rederive(path, functools.partial(sig_entries, fam))
+                _rederive(idx_dir, cell_entries)
     else:
         keep = fused_dedup(
             batch_df, id_col, text_col, vec_col, jaccard_threshold,
@@ -964,17 +917,9 @@ def fused_ingest_epoch(
          .partitionBy("epoch")
          .parquet(path))
 
-    _epoch_append(
-        build_minhash_index(fresh, text_col, id_col, num_hashes,
-                            shingle_size), sig_dir)
-    _epoch_append(
-        assign_cells(fresh.select(F.col(id_col), F.col(vec_col)),
-                     cents, vec_col, 1), idx_dir)
-    if weighted_threshold is not None:
-        _epoch_append(
-            build_weighted_minhash_index(
-                fresh, text_col, id_col, num_hashes, shingle_size),
-            wsig_dir)
+    for path, fam in sig_legs.items():
+        _epoch_append(sig_entries(fam, fresh), path)
+    _epoch_append(cell_entries(fresh), idx_dir)
     _epoch_append(fresh, corpus_dir)
 
 

@@ -3,6 +3,7 @@ LSH recall against the exact-Jaccard ground truth (SURVEY §5)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pyspark_deduplication_spark.operators.dedup import (
@@ -720,3 +721,76 @@ def test_weighted_jaccard_kernel_matches_relational_spelling(spark):
     for k, v in kernel.items():
         if k not in relational:
             assert v == 0.0, (k, v)
+
+
+def _cache_rdds(spark) -> int:
+    """Persistent RDDs that are ``persist()`` caches. Local checkpoints
+    register in the same map and stay there for as long as the frame
+    that checkpointed them lives, so they are not counted."""
+    rdds = spark.sparkContext._jsc.sc().getPersistentRDDs() \
+        .values().iterator()
+    n = 0
+    while rdds.hasNext():
+        n += not rdds.next().isLocallyCheckpointed()
+    return n
+
+
+@pytest.mark.parametrize("with_index", [False, True],
+                         ids=["derived_corpus", "caller_index"])
+@pytest.mark.parametrize("op", [
+    "incremental_minhash_dedup", "incremental_weighted_minhash_dedup",
+    "incremental_fused_dedup", "incremental_fused_match_pairs"])
+def test_corpus_probe_releases_only_its_own_caches(spark, op, with_index):
+    """Every caller of the shared corpus probe leaves the session with
+    exactly the caches it found: the signatures it persisted are
+    released, and a caller-persisted index is still cached afterwards
+    (caching is not reference-counted, so releasing it would make every
+    later batch re-materialize the index)."""
+    from pyspark.storagelevel import StorageLevel
+
+    from pyspark_deduplication_spark.operators import dedup, fused
+    from pyspark_deduplication_spark.operators.knn import (
+        build_semantic_dedup_index,
+    )
+
+    schema = "doc_id long, text string, embedding array<float>"
+    corpus = spark.createDataFrame(
+        [(i, f"corpus document number {i} with shared filler text",
+          [float(i), 1.0]) for i in range(8)], schema)
+    batch = spark.createDataFrame(
+        [(100, "a wholly new document about lunar geology", [50.0, -3.0]),
+         (101, "corpus document number 3 with shared filler text",
+          [3.0, 1.0])], schema)
+
+    def persisted(build):
+        idx = build(corpus).persist(StorageLevel.MEMORY_AND_DISK)
+        idx.count()
+        return idx
+
+    indexes = []
+    if op.startswith("incremental_fused"):
+        kw = {"n_cells": 2, "weighted_threshold": 0.6}
+        if with_index:
+            indexes = [persisted(dedup.build_minhash_index),
+                       persisted(dedup.build_weighted_minhash_index)]
+            kw.update(minhash_index=indexes[0], weighted_index=indexes[1],
+                      semantic_index=build_semantic_dedup_index(
+                          corpus.select("doc_id", "embedding"), n_cells=2,
+                          vec_id="doc_id"))
+        module, corpus_arg = fused, None if with_index else corpus
+    else:
+        kw = {"threshold": 0.6}
+        if with_index:
+            build = (dedup.build_weighted_minhash_index if "weighted" in op
+                     else dedup.build_minhash_index)
+            indexes = [persisted(build)]
+            kw["corpus_sigs"] = indexes[0]
+        module, corpus_arg = dedup, corpus
+
+    before = _cache_rdds(spark)
+    getattr(module, op)(batch, corpus_arg, **kw).collect()
+    assert _cache_rdds(spark) == before, f"{op} left a cache behind"
+    for idx in indexes:
+        assert idx.storageLevel.useMemory, (
+            f"{op} evicted the caller's persisted index")
+        idx.unpersist()

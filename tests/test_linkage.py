@@ -3,8 +3,10 @@ connected-components transitivity, cluster aggregation."""
 
 from __future__ import annotations
 
+import warnings
 from difflib import SequenceMatcher
 
+import pytest
 from pyspark.sql import functions as F
 
 from pyspark_deduplication_spark.operators.linkage import (
@@ -129,6 +131,23 @@ def test_connected_components_long_chain_converges(spark):
     comps = connected_components(edges, max_iterations=25).collect()
     assert {r.component for r in comps} == {0}
     assert len(comps) == 201
+
+
+def test_connected_components_warns_at_iteration_cap(spark):
+    """A path graph cut off after one round returns partial labels and
+    says so; the converging chain above stays silent."""
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(64)], "id_a long, id_b long")
+    with pytest.warns(RuntimeWarning, match="max_iterations=1"):
+        comps = connected_components(path, max_iterations=1).collect()
+    assert {r.component for r in comps} != {0}
+
+    chain = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        connected_components(chain).collect()
+    assert not [w for w in caught if "max_iterations" in str(w.message)]
 
 
 def test_checkpoint_strips_inherited_stats(spark):
