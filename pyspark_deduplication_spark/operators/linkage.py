@@ -9,10 +9,15 @@ The reference's Task 2 in three flavors, all reproduced here:
 - ``blocked_similarity_join``   the 100 TB path: cheap blocking key →
   equi-join → native n-gram-Jaccard / levenshtein prefilter → optional
   difflib rescore on survivors only.
-- ``connected_components``      distributed transitive closure over the
-  match graph (min-label propagation with pointer doubling, O(log d)
-  rounds) — the scalable rewrite of the reference's driver-side greedy
-  clustering (``solutionTwo.py:56-78``, SURVEY §2.5 A7).
+- ``connected_components``      transitive closure over the match graph,
+  labeling every node with its component's minimum id — the scalable
+  rewrite of the reference's driver-side greedy clustering
+  (``solutionTwo.py:56-78``, SURVEY §2.5 A7). Two paths: an edge list of
+  at most ``_LOCAL_CC_EDGES`` (2^16) rows is collected once and labeled
+  by a driver union-find rooted at each set's smallest id (one bounded
+  collect, no rounds); larger lists run the distributed min-label
+  propagation with pointer doubling. Both return the same minimum-id
+  labels, so which path ran never shows in the output.
 - ``cluster_members`` / ``transitive_clusters``  cluster-level set
   aggregation ≙ windowed ``collect_set`` (``soulutionOne.py:65-72``).
 
@@ -24,10 +29,12 @@ documents the reference's quirks (one row merging into several clusters,
 
 from __future__ import annotations
 
+import logging
 import warnings
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StringType
 
 from pyspark_deduplication_spark.functions.similarity import (
     canonical_pair_key,
@@ -302,76 +309,225 @@ def _checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     return _strip_inherited_stats(df.localCheckpoint(eager=eager))
 
 
+# Edge lists of at most this many rows are labeled on the driver (see
+# ``connected_components``): the driver holds at most 2^16 + 1 edge
+# rows, and on a 4-core box a 2^16-row (node, component) result frame
+# builds from Arrow and counts in under 0.2 s.
+_LOCAL_CC_EDGES = 1 << 16
+
+_log = logging.getLogger("pyspark_deduplication_spark")
+
+
+def _symmetrize(edges: DataFrame) -> DataFrame:
+    """Both directions of every ``(e_src, e_dst)`` edge as distinct
+    ``(u, v)`` rows; the union widens mixed-width endpoint columns to
+    one id type."""
+    return (
+        edges.select(F.col("e_src").alias("u"), F.col("e_dst").alias("v"))
+        .union(edges.select(F.col("e_dst").alias("u"),
+                            F.col("e_src").alias("v")))
+        .distinct()
+    )
+
+
+def _init_labels(sym: DataFrame) -> DataFrame:
+    """Each node's label initialized to min(node, min one-hop neighbor)
+    — the first propagation round folded into the init aggregation (the
+    init needs a per-node pass over sym anyway, so the min() rides the
+    same exchange for free). The fixpoint is unchanged — labels stay
+    min-reachable-id monotone — but star/pair components (the
+    overwhelming shape of near-dup graphs) converge AT init, so the
+    loop's first convergence check terminates one full
+    propagate+double+checkpoint round earlier."""
+    return (
+        sym.groupBy("u").agg(F.min("v").alias("__mv"))
+        .select(F.col("u").alias("node"),
+                F.least(F.col("u"), F.col("__mv")).alias("component"))
+    )
+
+
+def _cc_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
+    """One propagate + pointer-doubling round over ``labels``."""
+    # Propagate = min over {own label} ∪ {neighbors' labels}, spelled
+    # as a UNION into the neighbor-min aggregation instead of a
+    # second keyed join: the old shape (aggregate neighbor mins,
+    # then join them back onto labels) paid one more join + exchange
+    # per round for the exact same per-node minimum — every node in
+    # ``labels`` appears in ``sym`` by construction, so streaming
+    # the own-label rows through the same groupBy is lossless
+    # (measured 0.65× per CC call on the round-15 semantic graph,
+    # identical labels; r15 guide §2.3 "aggregate before you join").
+    propagated = (
+        sym.join(labels, sym.v == labels.node, "inner")
+        .select(F.col("u").alias("node"), F.col("component"))
+        .union(labels.select("node", "component"))
+        .groupBy("node")
+        .agg(F.min("component").alias("component"))
+    )
+    # pointer doubling: comp(x) <- min(comp(x), comp(comp(x))) —
+    # halves a node's label distance to its component root when ids
+    # grow away from the root (see ``connected_components``)
+    parent = propagated.select(
+        F.col("node").alias("p_node"), F.col("component").alias("p_comp")
+    )
+    return propagated.join(
+        parent, propagated.component == parent.p_node, "left"
+    ).select(
+        "node",
+        F.least(
+            F.col("component"),
+            F.coalesce(F.col("p_comp"), F.col("component")),
+        ).alias("component"),
+    )
+
+
+def _min_label_union_find(pairs) -> dict:
+    """node → minimum node id of its component, by a path-compressing
+    union-find whose every root is the smallest id of its set."""
+    parent: dict = {}
+
+    def find(x):
+        root = parent.setdefault(x, x)
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    return {x: find(x) for x in parent}
+
+
+def _driver_orderable(dtype) -> bool:
+    """Id types whose Python ordering is Spark's: integers, and strings
+    under the default byte-order collation (UTF-8 byte order is code
+    point order)."""
+    return isinstance(dtype, IntegralType) or (
+        isinstance(dtype, StringType) and dtype == StringType())
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 25,
 ) -> DataFrame:
-    """Connected components over an undirected edge list: min-label
-    propagation with pointer-doubling shortcutting per round —
+    """Connected components over an undirected edge list. Returns
+    (node, component) with component = min node id reachable.
 
-    1. every node adopts the minimum label in its one-hop neighborhood,
-    2. every node then adopts its label's label (``comp(comp(x))``),
+    Two paths compute the same labels, column names and types:
 
-    the short-cutting step of the classic MapReduce CC algorithms
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14). Plain one-hop propagation needs O(diameter) rounds — a
-    pathological chain of length 10^6 would silently hit the iteration
-    cap; with doubling the label distance-to-root halves each round, so
-    convergence is O(log(diameter)) and 25 rounds cover any realistic
-    graph (2^25 diameter). Stop when no label changes; a loop that
-    reaches ``max_iterations`` first returns its partial labels with a
-    ``RuntimeWarning``.
+    - **local** — an edge list of at most ``_LOCAL_CC_EDGES`` (2^16)
+      rows, with integer or string ids and no null endpoint, is
+      collected once (``limit(B + 1)`` bounds what the driver holds)
+      and labeled by a path-compressing union-find that roots every set
+      at its smallest id. Each label is therefore the component's
+      minimum id, which is the loop's fixpoint; Python orders these id
+      types as Spark does (strings by code point, which is UTF-8 byte
+      order). The result is one Arrow-backed ``createDataFrame`` whose
+      schema is taken from the loop's own analyzed plan. This is
+      Kiveris et al.'s finish-on-one-machine step (SoCC'14) applied
+      from the start: near-dup and linkage match graphs at catalog
+      scale are small, and the loop's per-round jobs, not its compute,
+      are their cost. The path always reaches the fixpoint;
+      ``max_iterations`` bounds only the loop.
+    - **distributed** — every other edge list: min-label propagation
+      with pointer-doubling shortcutting per round —
 
-    Returns (node, component) with component = min node id reachable.
-    Each round is one edge-join + union-fused min aggregation (the
-    propagate) and one label self-join (the doubling); checkpointing
-    truncates lineage each round so plans don't grow exponentially —
-    required for iterative algorithms on Spark.
+      1. every node adopts the minimum label in its one-hop
+         neighborhood,
+      2. every node then adopts its label's label (``comp(comp(x))``),
+
+      the short-cutting step of the classic MapReduce CC algorithms
+      (Kiveris et al.). Plain one-hop propagation needs O(diameter)
+      rounds. Doubling halves a node's distance to its root when ids
+      grow away from the component minimum (a 200-node path numbered
+      in order converges in a handful of rounds), but not for
+      arbitrary id order: a seeded 200-node path with random ids took
+      75 rounds. Stop when no label changes; a loop that reaches
+      ``max_iterations`` first returns its partial labels with a
+      ``RuntimeWarning``. Each round is one edge-join + union-fused
+      min aggregation (the propagate) and one label self-join (the
+      doubling); checkpointing truncates lineage each round so plans
+      don't grow exponentially — required for iterative algorithms on
+      Spark. Null endpoints take this path so they keep its semantics
+      (a null node is labeled, but joins nothing), and so do id types
+      whose order Python does not share (fractional numbers, dates,
+      collated strings).
+
+    Each call logs one decision line at INFO on the
+    ``pyspark_deduplication_spark`` logger: the path, the edge count
+    (``edges>B`` when the list overflowed the bound, ``edges=?`` when
+    the id type skipped the collect), the node count and, on the loop,
+    why it ran, the rounds run and whether it converged or hit the cap.
     """
-    # Materialize the edge list once: the symmetrization union reads it
-    # twice and every iteration reads it again — without this, the entire
-    # upstream pipeline (e.g. MinHash banding) re-executes per reference.
-    # Lazy checkpoint chain: edges → sym → labels all carry the
-    # checkpoint flag but materialize inside the ONE init-sum job below
-    # (each stores its blocks as that job computes it), instead of
-    # three separate materializing actions plus the sum.
+    # Materialize the edge list once: the bounded collect below and,
+    # on the loop, the symmetrization union and every round read it —
+    # without this, the entire upstream pipeline (e.g. MinHash banding)
+    # re-executes per reference. The checkpoint is lazy: the first
+    # action over it stores its blocks.
     edges = _checkpoint(edges.select(F.col(src).alias("e_src"),
                                      F.col(dst).alias("e_dst")),
                         eager=False)
-    sym = _checkpoint(
-        edges.select(F.col("e_src").alias("u"), F.col("e_dst").alias("v"))
-        .union(edges.select(F.col("e_dst").alias("u"),
-                            F.col("e_src").alias("v")))
-        .distinct(),
-        eager=False,
-    )
-    # Init each node's label to min(node, min one-hop neighbor) — the
-    # first propagation round folded into the init aggregation (the
-    # init needs a per-node pass over sym anyway, so the min() rides
-    # the same exchange for free). The fixpoint is unchanged — labels
-    # stay min-reachable-id monotone — but star/pair components (the
-    # overwhelming shape of near-dup graphs) now converge AT init, so
-    # the loop's first sum check terminates one full
-    # propagate+double+checkpoint round earlier.
-    labels = _checkpoint(
-        sym.groupBy("u").agg(F.min("v").alias("__mv"))
-        .select(F.col("u").alias("node"),
-                F.least(F.col("u"), F.col("__mv")).alias("component")),
-        eager=False,
-    )
+    sym = _symmetrize(edges)
+    # the loop's output schema, from its analyzed plan (no job)
+    schema = _cc_round(sym, _init_labels(sym)).schema
+    id_type = schema["node"].dataType
 
-    # Convergence detection without an extra join: per-node labels are
-    # non-increasing (every update is F.least(old, ...)), so the label
-    # SUM is strictly monotone until the fixpoint — sum unchanged ⟺ no
-    # node changed. One cheap aggregation over the freshly-checkpointed
+    if not _driver_orderable(id_type):
+        reason, edges_seen = f"id_type={id_type.simpleString()}", "=?"
+    else:
+        # the union's type coercion, applied to the collected endpoints
+        rows = edges.select(*(
+            F.col(c) if edges.schema[c].dataType == id_type
+            else F.col(c).cast(id_type)
+            for c in ("e_src", "e_dst")
+        )).limit(_LOCAL_CC_EDGES + 1).collect()
+        if len(rows) > _LOCAL_CC_EDGES:
+            reason, edges_seen = "over_bound", f">{_LOCAL_CC_EDGES}"
+        elif any(a is None or b is None for a, b in rows):
+            reason, edges_seen = "null_endpoint", f"={len(rows)}"
+        else:
+            import pyarrow as pa
+
+            comps = _min_label_union_find(rows)
+            _log.info("connected_components path=local edges=%d nodes=%d",
+                      len(rows), len(comps))
+            return edges.sparkSession.createDataFrame(
+                pa.table({"node": list(comps),
+                          "component": list(comps.values())}),
+                schema,
+            )
+
+    # Lazy checkpoint chain: sym → labels carry the checkpoint flag
+    # but materialize inside the ONE init job below (the label sum or
+    # count; each stores its blocks as that job computes it), instead
+    # of separate materializing actions plus the check.
+    sym = _checkpoint(sym, eager=False)
+    labels = _checkpoint(_init_labels(sym), eager=False)
+
+    # Convergence detection. Per-node labels are non-increasing (every
+    # update is F.least(old, ...)), so for integer ids the label SUM is
+    # strictly monotone until the fixpoint — sum unchanged ⟺ no node
+    # changed — and one cheap aggregation over the freshly-checkpointed
     # labels replaces a self-join + count job per round. decimal(38,0)
-    # keeps the sum exact (bigint ids × node count would overflow long).
-    def _label_sum(frame: DataFrame):
-        return frame.agg(
-            F.sum(F.col("component").cast("decimal(38,0)"))
-        ).collect()[0][0]
+    # keeps the sum exact (bigint ids × node count would overflow
+    # long). Other id types (strings, fractional numbers) have no exact
+    # sum, so their rounds count the nodes whose label moved, by a
+    # null-safe join against the previous round's labels.
+    by_sum = isinstance(id_type, IntegralType)
+    label_sum = F.sum(F.col("component").cast("decimal(38,0)"))
+
+    def _moved(new: DataFrame, old: DataFrame) -> int:
+        old = old.select(F.col("node").alias("__n"),
+                         F.col("component").alias("__c"))
+        return new.join(old, new.node.eqNullSafe(old.__n)).filter(
+            ~new.component.eqNullSafe(old.__c)).count()
 
     # NOTE (r16, measured and rejected): two variants of making the
     # loop's joins cheaper at model-state size were A/B'd and both
@@ -383,50 +539,27 @@ def connected_components(
     # zero — the per-round broadcast rebuild plus the count job eat
     # exactly what the skipped conversion saves. The loop stays on
     # AQE with unhinted joins.
-    prev_sum = _label_sum(labels)
-    for _ in range(max_iterations):
-        # Propagate = min over {own label} ∪ {neighbors' labels}, spelled
-        # as a UNION into the neighbor-min aggregation instead of a
-        # second keyed join: the old shape (aggregate neighbor mins,
-        # then join them back onto labels) paid one more join + exchange
-        # per round for the exact same per-node minimum — every node in
-        # ``labels`` appears in ``sym`` by construction, so streaming
-        # the own-label rows through the same groupBy is lossless
-        # (measured 0.65× per CC call on the round-15 semantic graph,
-        # identical labels; r15 guide §2.3 "aggregate before you join").
-        propagated = (
-            sym.join(labels, sym.v == labels.node, "inner")
-            .select(F.col("u").alias("node"), F.col("component"))
-            .union(labels.select("node", "component"))
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-        )
-        # pointer doubling: comp(x) <- min(comp(x), comp(comp(x))) —
-        # halves every node's label distance to its component root
-        parent = propagated.select(
-            F.col("node").alias("p_node"), F.col("component").alias("p_comp")
-        )
-        # lazy checkpoint: the convergence sum right below is the
-        # action that materializes this round's labels — one job per
-        # round, not a materialize + a sum
-        new_labels = _checkpoint(
-            propagated.join(
-                parent, propagated.component == parent.p_node, "left"
-            ).select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("p_comp"), F.col("component")),
-                ).alias("component"),
-            ),
-            eager=False,
-        )
-        labels = new_labels
-        new_sum = _label_sum(labels)
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
+    if by_sum:
+        prev_sum, nodes = labels.agg(
+            label_sum, F.count(F.lit(1))).collect()[0]
     else:
+        nodes = labels.count()
+    for rounds in range(1, max_iterations + 1):
+        # lazy checkpoint: the convergence check right below is the
+        # action that materializes this round's labels — one job per
+        # round, not a materialize + a check
+        prev, labels = labels, _checkpoint(_cc_round(sym, labels),
+                                           eager=False)
+        if by_sum:
+            new_sum = labels.agg(label_sum).collect()[0][0]
+            converged, prev_sum = new_sum == prev_sum, new_sum
+        else:
+            converged = _moved(labels, prev) == 0
+        if converged:
+            outcome = "converged"
+            break
+    else:
+        rounds, outcome = max_iterations, "hit_cap"
         warnings.warn(
             f"connected_components stopped at max_iterations="
             f"{max_iterations} before its labels converged; components "
@@ -434,6 +567,9 @@ def connected_components(
             RuntimeWarning,
             stacklevel=2,
         )
+    _log.info("connected_components path=distributed reason=%s edges%s "
+              "nodes=%d rounds=%d %s", reason, edges_seen, nodes, rounds,
+              outcome)
     return labels
 
 

@@ -3,12 +3,15 @@ connected-components transitivity, cluster aggregation."""
 
 from __future__ import annotations
 
+import logging
+import random
 import warnings
 from difflib import SequenceMatcher
 
 import pytest
 from pyspark.sql import functions as F
 
+from pyspark_deduplication_spark.operators import linkage
 from pyspark_deduplication_spark.operators.linkage import (
     blocked_similarity_join,
     cluster_members,
@@ -123,9 +126,14 @@ def test_blocked_join_no_cross_product(spark, sf_dir):
     assert all(r.sim >= 0.4 for r in rows)
 
 
-def test_connected_components_long_chain_converges(spark):
+@pytest.mark.parametrize("path", ["local", "distributed"])
+def test_connected_components_long_chain_converges(spark, monkeypatch, path):
     """A 200-node path graph has diameter 200 — one-hop propagation would
-    silently hit the 25-iteration cap; pointer doubling must converge."""
+    silently hit the 25-iteration cap; pointer doubling must converge.
+    Run on both paths: the graph is under the local bound, so the loop
+    is forced for the distributed case."""
+    if path == "distributed":
+        monkeypatch.setattr(linkage, "_LOCAL_CC_EDGES", 0)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "id_a long, id_b long")
     comps = connected_components(edges, max_iterations=25).collect()
@@ -133,9 +141,11 @@ def test_connected_components_long_chain_converges(spark):
     assert len(comps) == 201
 
 
-def test_connected_components_warns_at_iteration_cap(spark):
+def test_connected_components_warns_at_iteration_cap(spark, monkeypatch):
     """A path graph cut off after one round returns partial labels and
-    says so; the converging chain above stays silent."""
+    says so; the converging chain above stays silent. Both graphs are
+    under the local bound, so the loop is forced."""
+    monkeypatch.setattr(linkage, "_LOCAL_CC_EDGES", 0)
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], "id_a long, id_b long")
     with pytest.warns(RuntimeWarning, match="max_iterations=1"):
@@ -217,3 +227,157 @@ def test_propagate_union_spelling_matches_join_spelling(spark):
            .groupBy("node").agg(F.min("component").alias("component")))
     assert sorted(map(tuple, old.collect())) == \
         sorted(map(tuple, new.collect()))
+
+
+# ---------------------------------------------------------------------------
+# Connected components: the driver union-find path vs the distributed loop
+# ---------------------------------------------------------------------------
+
+_CC_LOG = "pyspark_deduplication_spark"
+
+# id kind → (column DDL, id encoder)
+_ID_KINDS = {
+    "int": ("id_a int, id_b int", lambda i: i),
+    "bigint": ("id_a bigint, id_b bigint", lambda i: (1 << 40) + i),
+    # prefixes make string order disagree with numeric order; "é" is
+    # multi-byte in UTF-8, "Z" sorts before "z"
+    "string": ("id_a string, id_b string",
+               lambda i: ("", "é", "Z", "z")[i % 4] + str(i)),
+    # the union widens int src and bigint dst to bigint
+    "mixed_width": ("id_a int, id_b bigint", lambda i: i),
+}
+
+
+def _random_graph(seed: int) -> list[tuple[int, int]]:
+    """A star, a long chain, random small components, self-loops
+    (some on otherwise isolated nodes), and duplicate and reversed
+    copies of existing edges, in shuffled order."""
+    rng = random.Random(seed)
+    ids = rng.sample(range(1, 5000), 260)
+    hub, leaves = ids[0], ids[1:25]
+    chain = ids[25:75]
+    pool = ids[75:240]
+    edges = [(hub, x) for x in leaves]
+    edges += list(zip(chain, chain[1:]))
+    edges += [tuple(rng.sample(pool, 2)) for _ in range(60)]
+    edges += [(x, x) for x in rng.sample(ids[:240], 8) + ids[240:]]
+    edges += rng.sample(edges, 12)
+    edges += [(b, a) for a, b in rng.sample(edges, 12)]
+    rng.shuffle(edges)
+    return edges
+
+
+def _cc_rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _cc_paths(caplog) -> list[str]:
+    return [r.getMessage().split()[1] for r in caplog.records
+            if r.name == _CC_LOG and "connected_components" in r.getMessage()]
+
+
+@pytest.mark.parametrize("kind,seed", [
+    ("int", 11), ("bigint", 12), ("string", 13), ("mixed_width", 14)])
+def test_local_cc_matches_loop(spark, monkeypatch, caplog, kind, seed):
+    """The driver union-find returns the loop's rows and schema on
+    seeded graphs with stars, long chains, self-loops, and duplicate
+    and reversed edges, for int, bigint, string and mixed-width ids.
+    The chain's ids are in random order, which the loop's pointer
+    doubling does not shortcut (dozens of rounds, not log2 of the
+    chain length), so the loop gets room to reach its fixpoint and
+    must report that it did."""
+    caplog.set_level(logging.INFO, logger=_CC_LOG)
+    ddl, enc = _ID_KINDS[kind]
+    edges = spark.createDataFrame(
+        [(enc(a), enc(b)) for a, b in _random_graph(seed)], ddl)
+    local = connected_components(edges)
+    local_rows = _cc_rows(local)
+    monkeypatch.setattr(linkage, "_LOCAL_CC_EDGES", 0)
+    loop = connected_components(edges, max_iterations=100)
+    assert _cc_paths(caplog) == ["path=local", "path=distributed"]
+    assert caplog.records[-1].getMessage().endswith(" converged")
+    assert local.schema == loop.schema
+    assert local_rows == _cc_rows(loop)
+
+
+def test_local_cc_bound_is_inclusive(spark, monkeypatch, caplog):
+    """With the bound patched to 8, exactly 8 edges take the local path
+    and 9 take the loop; both label every node with its component's
+    minimum id."""
+    caplog.set_level(logging.INFO, logger=_CC_LOG)
+    monkeypatch.setattr(linkage, "_LOCAL_CC_EDGES", 8)
+    eight = [(5, 3), (3, 9), (9, 1), (7, 8), (8, 4), (10, 10), (2, 6),
+             (6, 2)]
+    nine = eight + [(4, 9)]
+    at = connected_components(
+        spark.createDataFrame(eight, "id_a long, id_b long"))
+    over = connected_components(
+        spark.createDataFrame(nine, "id_a long, id_b long"))
+    assert _cc_paths(caplog) == ["path=local", "path=distributed"]
+    assert dict(at.collect()) == {1: 1, 3: 1, 5: 1, 9: 1, 4: 4, 7: 4,
+                                  8: 4, 10: 10, 2: 2, 6: 2}
+    assert dict(over.collect()) == {1: 1, 3: 1, 5: 1, 9: 1, 4: 1, 7: 1,
+                                    8: 1, 10: 10, 2: 2, 6: 2}
+    monkeypatch.setattr(linkage, "_LOCAL_CC_EDGES", 0)
+    loop = connected_components(
+        spark.createDataFrame(eight, "id_a long, id_b long"))
+    assert _cc_rows(at) == _cc_rows(loop)
+
+
+def test_cc_null_endpoints_keep_loop_output(spark, monkeypatch, caplog):
+    """Edge lists with a null ``src`` or ``dst`` give exactly the loop's
+    output: a null node is labeled with its neighbors' minimum but joins
+    no two components."""
+    caplog.set_level(logging.INFO, logger=_CC_LOG)
+    edges = spark.createDataFrame(
+        [(1, None), (None, 2), (None, None), (3, 4), (4, 4)],
+        "id_a long, id_b long")
+    default = connected_components(edges)
+    assert _cc_rows(default) == sorted(
+        [(1, 1), (2, 2), (3, 3), (4, 3), (None, 1)], key=repr)
+    monkeypatch.setattr(linkage, "_LOCAL_CC_EDGES", 0)
+    loop = connected_components(edges)
+    assert _cc_rows(default) == _cc_rows(loop)
+    assert default.schema == loop.schema
+    reasons = [r.getMessage() for r in caplog.records if r.name == _CC_LOG]
+    assert "reason=null_endpoint" in reasons[0]
+
+
+def test_local_cc_leaves_no_cache(spark, caplog):
+    """The local path persists nothing: the count of cached RDDs that
+    are not local checkpoints is back at its baseline after the call."""
+    from test_dedup import _cache_rdds
+
+    caplog.set_level(logging.INFO, logger=_CC_LOG)
+    edges = spark.createDataFrame(_random_graph(3), "id_a long, id_b long")
+    before = _cache_rdds(spark)
+    connected_components(edges).collect()
+    assert _cc_paths(caplog) == ["path=local"]
+    assert _cache_rdds(spark) == before
+
+
+def test_cc_logs_one_decision_line_per_call(spark, monkeypatch, caplog):
+    """Every call logs exactly one line naming its path with edge and
+    node counts; loop lines add the rounds run and how the loop ended."""
+    caplog.set_level(logging.INFO, logger=_CC_LOG)
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(16)], "id_a long, id_b long")
+
+    def line() -> str:
+        caplog.clear()
+        connected_components(chain, max_iterations=cap).collect()
+        msgs = [r.getMessage() for r in caplog.records if r.name == _CC_LOG]
+        assert len(msgs) == 1, msgs
+        return msgs[0]
+
+    cap = 25
+    assert line() == "connected_components path=local edges=16 nodes=17"
+    monkeypatch.setattr(linkage, "_LOCAL_CC_EDGES", 0)
+    msg = line()
+    assert msg.startswith("connected_components path=distributed "
+                          "reason=over_bound edges>0 nodes=17 rounds=")
+    assert msg.endswith(" converged")
+    cap = 1
+    with pytest.warns(RuntimeWarning, match="max_iterations=1"):
+        msg = line()
+    assert msg.endswith("nodes=17 rounds=1 hit_cap")
