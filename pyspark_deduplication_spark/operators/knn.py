@@ -129,19 +129,13 @@ def _cell_sim_structs(cents: list[tuple[int, list[float]]], vec_col: str):
     (``_topn_cells_expr``). For very large n_cells × dim the literal
     expression tree would stress codegen; assignment falls back to the
     broadcast-join path there (``assign_cells``)."""
-    import math
-
-    def unit(c: list[float]) -> list[float]:
-        n = math.sqrt(sum(x * x for x in c))
-        return [x / n for x in c] if n > 0 else c
-
     return F.array(*[
         F.struct(
             dot(F.col(vec_col),
-                F.array(*[F.lit(float(x)) for x in unit(c)])).alias("sim"),
+                F.array(*[F.lit(float(x)) for x in u])).alias("sim"),
             F.lit(-int(cid)).alias("negid"),
         )
-        for cid, c in cents
+        for (cid, _), u in zip(cents, _unit_rows(cents))
     ])
 
 
@@ -317,10 +311,10 @@ def _spread_for_lloyd(df: DataFrame) -> DataFrame:
 
 
 def _unit_rows(cents: list[tuple[int, list[float]]]) -> list[list[float]]:
-    """Driver-side unit normalization of centroid rows — the SAME
-    python-float arithmetic ``_cell_sim_structs`` folds into its
-    literals, shared so the Arrow Lloyd kernel scores against
-    bit-identical centroid values."""
+    """Driver-side unit normalization of centroid rows, shared by the
+    assignment literals (``_cell_sim_structs``) and the cosine Lloyd
+    kernel (``_lloyd_stats``) so both score against bit-identical
+    centroid values."""
     import math
 
     out = []
@@ -330,75 +324,175 @@ def _unit_rows(cents: list[tuple[int, list[float]]]) -> list[list[float]]:
     return out
 
 
-def _lloyd_centroid_stats(train: DataFrame,
-                          cents: list[tuple[int, list[float]]],
-                          vec_col: str) -> DataFrame:
+def _lloyd_stats(train: DataFrame,
+                 book: dict[tuple[int, int], list[float]],
+                 vec_col: str, metric: str) -> DataFrame:
     """One Lloyd round's sufficient statistics as a vectorized Arrow
-    pass: per partition, assign each vector to its argmax-unit-dot cell
-    and emit per-(cell_id, pos) partial sums + member counts. Replaces
-    the n_cells×dim literal-expression round (assignment expression +
-    posexplode + hash aggregate): the literal tree re-planned,
-    re-optimized and re-codegen'd on EVERY round (fresh literals defeat
-    the codegen cache) and its zip_with/aggregate HOFs are interpreted —
-    measured 1.5s/round vs 0.45s for this kernel at sf0.1 (guide §4.2).
-    The arithmetic reproduces the JVM expression exactly where it is
-    deterministic: centroids unit-normalize driver-side with the same
-    python floats, the dot accumulates position-sequentially in float64
-    (``acc + x_i*c_i``, the ``F.aggregate`` order), ties break to the
-    smallest cell id (np.argmax first-index = max (sim, negid) struct),
-    and per-key partial sums accumulate in row order within a batch
-    (``np.cumsum``). Cross-batch/cross-partition merge order differs in
-    association exactly like the hash-aggregate's partition merge — the
-    9dp rounding downstream absorbs both. Output partials are ≤
-    partitions × n_cells × dim scalar rows — model state, never
-    corpus-sized."""
+    pass (see ``_lloyd_rounds``): per partition, slice each subspace of
+    every vector, assign it to its nearest codeword and emit
+    per-(subspace, code, pos) partial sums + member counts. ``metric``
+    is ``"cosine"`` (argmax of the dot against driver-side unit
+    codewords, ``_unit_rows``; np.argmax takes the first NaN, matching
+    the struct max's NaN-largest ordering) or ``"l2"`` (argmin of the
+    squared distance, NaN demoted to +inf like struct-min's NaN-largest
+    ordering). The arithmetic reproduces the JVM literal-expression
+    round it replaced exactly where that round is deterministic: scores
+    accumulate position-sequentially in float64 (``acc + x_i*c_i`` /
+    ``acc + (a-b)*(a-b)``, the ``F.aggregate`` order), ties break to
+    the smaller code (first index over ascending codes), and per-key
+    partials accumulate in row order within a batch (``np.cumsum``).
+    Cross-batch/cross-partition merge order differs in association
+    exactly like the hash-aggregate's partition merge — the 9dp
+    rounding downstream absorbs both. Output partials are ≤ partitions
+    × codes × dim scalar rows — model state, never corpus-sized."""
     from typing import Iterator
 
     import numpy as np
     import pandas as pd
 
-    cents_sorted = sorted(cents)
-    cids = [cid for cid, _ in cents_sorted]
-    unit = np.asarray(_unit_rows(cents_sorted), dtype=np.float64)
-    dim = unit.shape[1]
+    books = []
+    for s in sorted({s for s, _ in book}):
+        rows = sorted((c, w) for (m, c), w in book.items() if m == s)
+        cw = _unit_rows(rows) if metric == "cosine" else [w for _, w in rows]
+        books.append((s, [c for c, _ in rows],
+                      np.asarray(cw, dtype=np.float64)))
+    sub = books[0][2].shape[1]
+    dim = (books[-1][0] + 1) * sub
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sums: dict[int, np.ndarray] = {}
-        counts: dict[int, int] = {}
+        sums: dict[tuple[int, int], np.ndarray] = {}
+        counts: dict[tuple[int, int], int] = {}
         for pdf in batches:
             vs = [v for v in pdf[vec_col]
                   if v is not None and len(v) == dim]
             if not vs:
                 continue
             X = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
-            sims = np.zeros((X.shape[0], unit.shape[0]))
-            for i in range(dim):
-                sims += X[:, i:i + 1] * unit[:, i]
-            best = np.argmax(sims, axis=1)
-            for bi in range(unit.shape[0]):
-                mask = best == bi
-                m = int(mask.sum())
-                if not m:
-                    continue
-                part = np.cumsum(X[mask], axis=0)[-1]
-                cid = cids[bi]
-                if cid in sums:
-                    sums[cid] = sums[cid] + part
-                    counts[cid] += m
+            for s, codes, cw in books:
+                Xs = X[:, s * sub:(s + 1) * sub]
+                score = np.zeros((Xs.shape[0], cw.shape[0]))
+                if metric == "cosine":
+                    for i in range(sub):
+                        score += Xs[:, i:i + 1] * cw[:, i]
+                    best = np.argmax(score, axis=1)
                 else:
-                    sums[cid] = part
-                    counts[cid] = m
+                    for i in range(sub):
+                        diff = Xs[:, i:i + 1] - cw[:, i]
+                        score += diff * diff
+                    best = np.argmin(
+                        np.where(np.isnan(score), np.inf, score), axis=1)
+                for bi, code in enumerate(codes):
+                    mask = best == bi
+                    m = int(mask.sum())
+                    if not m:
+                        continue
+                    part = np.cumsum(Xs[mask], axis=0)[-1]
+                    key = (s, code)
+                    if key in sums:
+                        sums[key] = sums[key] + part
+                        counts[key] += m
+                    else:
+                        sums[key] = part
+                        counts[key] = m
         if sums:
             yield pd.DataFrame({
-                "cell_id": [cid for cid in sums for _ in range(dim)],
-                "pos": [p for cid in sums for p in range(dim)],
-                "s": [float(sums[cid][p]) for cid in sums
-                      for p in range(dim)],
-                "n": [counts[cid] for cid in sums for _ in range(dim)],
+                "subspace": [k[0] for k in sums for _ in range(sub)],
+                "code": [k[1] for k in sums for _ in range(sub)],
+                "pos": [p for _ in sums for p in range(sub)],
+                "s": [float(sums[k][p]) for k in sums
+                      for p in range(sub)],
+                "n": [counts[k] for k in sums for _ in range(sub)],
             })
 
     return train.select(F.col(vec_col)).mapInPandas(
-        stats, "cell_id long, pos int, s double, n long")
+        stats, "subspace int, code long, pos int, s double, n long")
+
+
+def _lloyd_rounds(
+    vectors: DataFrame,
+    book: dict[tuple[int, int], list[float]],
+    vec_id: str,
+    vec_col: str,
+    n_iter: int,
+    train_sample_mod: int,
+    metric: str,
+) -> dict[tuple[int, int], list[float]]:
+    """Lloyd's algorithm over a ``{(subspace, code): codeword}`` book —
+    the one trainer behind the IVF coarse quantizer (``train_centroids``:
+    one subspace, spherical k-means, ``metric="cosine"``) and the
+    product quantizer (``train_pq_codebook``/``train_opq``: per-subspace
+    L2 k-means, ``metric="l2"``), which Jégou et al. (TPAMI'11) define
+    as the same k-means. Returns the trained book; ``n_iter <= 0`` or
+    an empty book returns it unchanged without a job.
+
+    Each round is shaped for the 100 TB case:
+
+    1. **Assignment + partial sums** run in ONE vectorized Arrow pass
+       over the training stream (``_lloyd_stats``). The codewords are
+       model state shipped with the kernel — the corpus is scanned,
+       never joined or shuffled. This replaced a per-row literal
+       expression (assignment over codeword literals + posexplode +
+       hash aggregate) whose tree re-planned, re-optimized and
+       re-codegen'd on EVERY round (fresh literals defeat the codegen
+       cache) and whose zip_with/aggregate HOFs are interpreted —
+       measured 1.5 s/round vs 0.45 s for the kernel at sf0.1.
+    2. **Merge**: the partials sum per (subspace, code, pos) in one
+       Spark aggregation — the shuffle moves ≤ partitions × codes × dim
+       scalar rows at ANY corpus size — and the aggregate collects to
+       the driver to become the next round's book (model state, like
+       pulling k-means coefficients out of pyspark.ml). The round runs
+       under ``model_state_exec`` (AQE off): adaptive re-planning buys
+       nothing on a bounded exchange and costs one extra job per round.
+
+    Per-position sums are rounded to 9 decimals before the mean, which
+    makes partition-order float jitter overwhelmingly unlikely to leak
+    into a codeword (a sum landing within ~1e-10 of a rounding boundary
+    could still round differently — rounding shrinks the exposure, it
+    is not a bit-reproducibility guarantee). Empty codes keep their
+    previous codeword. ``train_sample_mod > 1`` trains on a
+    deterministic 1/mod hash-sample of ``vec_id`` (standard practice:
+    codebook quality needs ~O(100·k) samples, not 100 TB)."""
+    if n_iter <= 0 or not book:
+        return book
+    from pyspark_deduplication_spark.session import model_state_exec
+
+    spark = vectors.sparkSession
+    train = vectors.select(F.col(vec_id), F.col(vec_col))
+    if train_sample_mod > 1:
+        train = train.filter(
+            F.pmod(F.xxhash64(F.col(vec_id)), F.lit(train_sample_mod)) == 0
+        )
+    # Spread (size-conditional, see _spread_for_lloyd) + pin the
+    # training stream across rounds, so later rounds neither re-scan
+    # parquet nor re-pay the shuffle; sample-sized when
+    # train_sample_mod is armed.
+    train = _spread_for_lloyd(train)
+    train.persist()
+    try:
+        for _ in range(n_iter):
+            with model_state_exec(spark):
+                sums = (
+                    _lloyd_stats(train, book, vec_col, metric)
+                    .groupBy("subspace", "code", "pos")
+                    .agg(F.round(F.sum("s"), 9).alias("s"),
+                         F.sum("n").alias("n"))
+                    .collect()  # ≤ codes × dim rows — model state
+                )
+            new: dict[tuple[int, int], list[float]] = {}
+            counts: dict[tuple[int, int], int] = {}
+            for r in sums:
+                key = (int(r["subspace"]), int(r["code"]))
+                new.setdefault(key, [0.0] * len(book[key]))[
+                    int(r["pos"])] = float(r["s"])
+                counts[key] = int(r["n"])
+            book = {
+                key: ([s / counts[key] for s in new[key]] if key in new
+                      else cw)
+                for key, cw in book.items()
+            }
+    finally:
+        train.unpersist()
+    return book
 
 
 def train_centroids(
@@ -412,28 +506,12 @@ def train_centroids(
     """Spherical k-means centroids for IVF, Lloyd's algorithm.
 
     Init is the deterministic hash-elected representative per cell (one
-    pass, no RNG) — ``n_iter=0`` reproduces the former stand-in. Each
-    Lloyd round is shaped for the 100 TB case:
-
-    1. **Assignment** is a per-row native expression over the centroid
-       literals (model state lives in the plan, like the LSH hyperplanes
-       below) — the corpus is scanned, never joined or shuffled.
-    2. **Update** pos-explodes assigned vectors and sums per (cell, pos)
-       with map-side partial aggregation — the shuffle moves at most
-       ``n_cells × dim`` scalar rows per map partition, independent of
-       corpus size.
-    3. The ``n_cells × dim`` aggregate collects to the driver to become
-       the next round's literals — this is model state (same as pulling
-       k-means coefficients out of pyspark.ml), not a data-path collect.
-
-    Per-position sums are rounded to 9 decimals before the mean, which
-    makes partition-order float jitter overwhelmingly unlikely to leak
-    into a centroid (a sum landing within ~1e-10 of a rounding boundary
-    could still round differently — rounding shrinks the exposure, it is
-    not a bit-reproducibility guarantee). Empty cells
-    keep their previous centroid. ``train_sample_mod > 1`` trains on a
-    deterministic 1/mod hash-sample of the corpus (standard practice:
-    centroid quality needs ~O(100·k) samples, not 100 TB).
+    pass, no RNG) — ``n_iter=0`` reproduces the former stand-in. The
+    ``n_iter`` rounds run in ``_lloyd_rounds`` on a one-subspace book
+    scored by unit dot (argmax cosine, ties to the smaller cell id);
+    its docstring describes the round's 100 TB shape, the 9dp sum
+    rounding and ``train_sample_mod``. Empty cells keep their previous
+    centroid.
 
     Returns (cell_id, centroid array<double>), always broadcastable.
     """
@@ -459,67 +537,21 @@ def train_centroids(
     # NOTE: the init collect deliberately keeps AQE ON — this job also
     # materializes any upstream lazy checkpoints (clone-collapse
     # windows, anti-join survivors), which are DATA-sized at scale;
-    # only the per-round stats jobs below are bounded by construction.
-    cents: dict[int, list[float]] = {
-        int(r["cell_id"]): [float(x) for x in r["centroid"]]
+    # only the per-round stats jobs are bounded by construction.
+    book = {
+        (0, int(r["cell_id"])): [float(x) for x in r["centroid"]]
         for r in init.collect()  # n_cells rows — model state, tiny
     }
-    if not cents:
+    if not book:
         # EMPTY training input (e.g. an ingest batch whose rows all
         # dropped against the corpus): return the empty init frame —
-        # the Lloyd assignment literal over zero centroids is not even
-        # constructible (array_max over an empty array literal), and
         # downstream assign_cells/pairing handle an empty centroid
         # table through the join fallback
         return init
-    train = vectors.select(F.col(vec_id), F.col(vec_col))
-    if train_sample_mod > 1:
-        train = train.filter(
-            F.pmod(F.xxhash64(F.col(vec_id)), F.lit(train_sample_mod)) == 0
-        )
-    # Spread (size-conditional, see _spread_for_lloyd) + pin the
-    # training stream across Lloyd rounds, so later rounds neither
-    # re-scan parquet nor re-pay the shuffle; sample-sized when
-    # train_sample_mod is armed — the 100 TB spelling trains on a
-    # hash-sample anyway.
-    train = _spread_for_lloyd(train)
-    train.persist()
-    try:
-        from pyspark_deduplication_spark.session import model_state_exec
-
-        for _ in range(n_iter):
-            # assignment + partial sums in ONE vectorized Arrow pass
-            # (see _lloyd_centroid_stats — the literal-expression round
-            # re-planned and re-codegen'd per iteration); the final
-            # merge + 9dp rounding stays the same Spark aggregation.
-            # AQE off for the round (model_state_exec): the ONLY
-            # exchange carries ≤ partitions × n_cells × dim scalar
-            # rows at ANY corpus size, so adaptive re-planning buys
-            # nothing and costs one extra job per round.
-            with model_state_exec(spark):
-                sums = (
-                    _lloyd_centroid_stats(train, sorted(cents.items()),
-                                          vec_col)
-                    .groupBy("cell_id", "pos")
-                    .agg(F.round(F.sum("s"), 9).alias("s"),
-                         F.sum("n").alias("n"))
-                    .collect()  # ≤ n_cells × dim rows — model state
-                )
-            dim = len(next(iter(cents.values())))
-            new: dict[int, list[float]] = {}
-            counts: dict[int, int] = {}
-            for r in sums:
-                cid = int(r["cell_id"])
-                new.setdefault(cid, [0.0] * dim)[int(r["pos"])] = float(r["s"])
-                counts[cid] = int(r["n"])
-            cents = {
-                cid: ([s / counts[cid] for s in new[cid]] if cid in new else c)
-                for cid, c in cents.items()
-            }
-    finally:
-        train.unpersist()
+    book = _lloyd_rounds(vectors, book, vec_id, vec_col, n_iter,
+                         train_sample_mod, "cosine")
     return spark.createDataFrame(
-        [(cid, c) for cid, c in sorted(cents.items())],
+        [(cid, c) for (_, cid), c in sorted(book.items())],
         "cell_id long, centroid array<double>",
     )
 
@@ -1257,77 +1289,15 @@ def _subvec(vec_col: str, m: int, sub_dim: int):
     return F.slice(F.col(vec_col), m * sub_dim + 1, sub_dim)
 
 
-def _lloyd_pq_stats(train: DataFrame,
-                    book: dict[tuple[int, int], list[float]],
-                    m_subspaces: int, sub: int,
-                    vec_col: str) -> DataFrame:
-    """One PQ-Lloyd round's sufficient statistics as a vectorized Arrow
-    pass — the product-quantizer sibling of ``_lloyd_centroid_stats``
-    (same motivation: the per-round literal codeword table +
-    interpreted zip_with/aggregate argmin-L2 re-planned and
-    re-codegen'd every iteration). Consumes the raw vectors and slices
-    subspaces in the kernel, so the posexplode fan-out never
-    materializes either. Arithmetic mirrors the JVM expression:
-    distances accumulate position-sequentially in float64
-    (``acc + (a-b)*(a-b)``), ties break to the smallest code
-    (first-index argmin over codes in ascending order; NaN distances
-    demote to +inf, matching struct-min's NaN-largest ordering), and
-    per-(subspace, code, pos) partials accumulate in row order within
-    a batch. Final merge + 9dp rounding stays in Spark."""
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    dim = m_subspaces * sub
-    books = []
-    for s in range(m_subspaces):
-        codes = sorted(c for m, c in book if m == s)
-        books.append((codes, np.asarray(
-            [book[(s, c)] for c in codes], dtype=np.float64)))
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sums: dict[tuple[int, int], np.ndarray] = {}
-        counts: dict[tuple[int, int], int] = {}
-        for pdf in batches:
-            vs = [v for v in pdf[vec_col]
-                  if v is not None and len(v) == dim]
-            if not vs:
-                continue
-            X = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
-            for s, (codes, cw) in enumerate(books):
-                Zs = X[:, s * sub:(s + 1) * sub]
-                d = np.zeros((Zs.shape[0], cw.shape[0]))
-                for i in range(sub):
-                    diff = Zs[:, i:i + 1] - cw[:, i]
-                    d += diff * diff
-                d = np.where(np.isnan(d), np.inf, d)
-                best = np.argmin(d, axis=1)
-                for bi in range(cw.shape[0]):
-                    mask = best == bi
-                    m = int(mask.sum())
-                    if not m:
-                        continue
-                    part = np.cumsum(Zs[mask], axis=0)[-1]
-                    key = (s, codes[bi])
-                    if key in sums:
-                        sums[key] = sums[key] + part
-                        counts[key] += m
-                    else:
-                        sums[key] = part
-                        counts[key] = m
-        if sums:
-            yield pd.DataFrame({
-                "subspace": [k[0] for k in sums for _ in range(sub)],
-                "code": [k[1] for k in sums for _ in range(sub)],
-                "pos": [p for _ in sums for p in range(sub)],
-                "s": [float(sums[k][p]) for k in sums
-                      for p in range(sub)],
-                "n": [counts[k] for k in sums for _ in range(sub)],
-            })
-
-    return train.select(F.col(vec_col)).mapInPandas(
-        stats, "subspace int, code long, pos int, s double, n long")
+def _collect_book(codebook: DataFrame) -> dict[tuple[int, int], list[float]]:
+    """{(subspace, code): codeword} from a (subspace, code, codeword)
+    frame — m·k rows of model state. AQE stays ON for this collect: it
+    may also materialize upstream lazy checkpoints (data-sized at
+    scale) — see train_centroids."""
+    return {
+        (int(r["subspace"]), int(r["code"])): [float(x) for x in r["codeword"]]
+        for r in codebook.collect()
+    }
 
 
 def train_pq_codebook(
@@ -1340,26 +1310,19 @@ def train_pq_codebook(
     n_iter: int = 4,
     train_sample_mod: int = 1,
     init_book: dict | None = None,
-    _return_book: bool = False,
-) -> DataFrame | dict:
+) -> DataFrame:
     """PQ codebook: the vector space splits into ``m_subspaces``
     contiguous slices; each subspace gets ``k_codes`` codewords trained
     by per-subspace L2 k-means (Lloyd), initialized from deterministic
     hash-elected representative subvectors — ``n_iter=0`` reproduces the
-    single-pass stand-in. Returns (subspace, code, codeword) —
-    ``m_subspaces * k_codes`` rows, always broadcastable.
+    single-pass stand-in — or warm-started from ``init_book``. Returns
+    (subspace, code, codeword) — ``m_subspaces * k_codes`` rows, always
+    broadcastable.
 
-    All subspaces train in ONE distributed pipeline per Lloyd round
-    (same 100 TB shape as ``train_centroids``): subvectors pos-explode
-    once; assignment is a per-row argmin-L2 over the codeword literals
-    selected by subspace (model state in the plan, no join); the update
-    shuffles only (subspace, code, pos) partial sums with map-side
-    combine — ≤ ``m·k·sub_dim`` scalar rows per map partition. Sums
-    round to 9 decimals, making partition-order jitter overwhelmingly
-    unlikely to flip a codeword (not a hard bit-reproducibility
-    guarantee — boundary-adjacent sums can still round apart); empty
-    codes keep their previous codeword;
-    ``train_sample_mod`` caps training cost on huge corpora.
+    All subspaces train in ONE distributed pass per Lloyd round in
+    ``_lloyd_rounds`` (``metric="l2"``, ties to the smaller code); its
+    docstring describes the round's 100 TB shape, the 9dp sum rounding
+    and ``train_sample_mod``. Empty codes keep their previous codeword.
 
     PQ compresses each vector to ``m_subspaces`` small ints (8 bytes at
     8×16) instead of ``dim`` floats (256 bytes at dim=64) — the memory
@@ -1372,9 +1335,7 @@ def train_pq_codebook(
     sub = dim // m_subspaces
     if init_book is not None:
         # warm start from a caller-provided {(subspace, code): codeword}
-        # (the OPQ loop passes the previous round's book so Lloyd
-        # refines instead of re-electing hash representatives — the
-        # reinit noise that motivated train_opq's keep-best return).
+        # so Lloyd refines instead of re-electing hash representatives.
         # Validate shape up front: a wrong-k/wrong-dim book would
         # otherwise train silently with the wrong code set, or corrupt
         # distances deep inside zip_with (which truncates to the
@@ -1391,12 +1352,6 @@ def train_pq_codebook(
                 f"sub_dim {sub}")
         book: dict[tuple[int, int], list[float]] = {
             k: [float(x) for x in v] for k, v in init_book.items()}
-        if n_iter <= 0:
-            if _return_book:
-                return book
-            return spark.createDataFrame(
-                [(m, c, w) for (m, c), w in sorted(book.items())],
-                "subspace int, code long, codeword array<double>")
     else:
         parts = []
         for m in range(m_subspaces):
@@ -1418,68 +1373,11 @@ def train_pq_codebook(
         init = parts[0]
         for p in parts[1:]:
             init = init.unionAll(p)
-        if n_iter <= 0 and not _return_book:
-            return init
-
-        # {(subspace, code): codeword} — m·k rows of model state.
-        # AQE stays ON here: this job may also materialize upstream
-        # lazy checkpoints (data-sized at scale) — see train_centroids.
-        book = {
-            (int(r["subspace"]), int(r["code"])):
-                [float(x) for x in r["codeword"]]
-            for r in init.collect()
-        }
         if n_iter <= 0:
-            return book
-    train = vectors.select(F.col(vec_id), F.col(vec_col))
-    if train_sample_mod > 1:
-        train = train.filter(
-            F.pmod(F.xxhash64(F.col(vec_id)), F.lit(train_sample_mod)) == 0
-        )
-    # Spread (size-conditional) + pin across Lloyd rounds — same
-    # rationale as train_centroids; the subspace slicing now happens
-    # inside the Arrow kernel (_lloyd_pq_stats), so the stream is the
-    # raw vectors, sample-sized under train_sample_mod.
-    train = _spread_for_lloyd(train)
-    train.persist()
-    try:
-        from pyspark_deduplication_spark.session import model_state_exec
-
-        for _ in range(n_iter):
-            # assignment + partial sums in ONE vectorized Arrow pass
-            # per round (see _lloyd_pq_stats); final merge + 9dp
-            # rounding stays the same Spark aggregation. AQE off per
-            # round: the only exchange is ≤ m·k·sub_dim scalar rows
-            # per map partition at any corpus size (model_state_exec).
-            with model_state_exec(spark):
-                sums = (
-                    _lloyd_pq_stats(train, book, m_subspaces, sub,
-                                    vec_col)
-                    .groupBy("subspace", "code", "pos")
-                    .agg(F.round(F.sum("s"), 9).alias("s"),
-                         F.sum("n").alias("n"))
-                    .collect()  # ≤ m·k·sub_dim rows — model state
-                )
-            new: dict[tuple[int, int], list[float]] = {}
-            counts: dict[tuple[int, int], int] = {}
-            for r in sums:
-                key = (int(r["subspace"]), int(r["code"]))
-                new.setdefault(key, [0.0] * sub)[int(r["pos"])] = float(r["s"])
-                counts[key] = int(r["n"])
-            book = {
-                key: ([s / counts[key] for s in new[key]] if key in new
-                      else cw)
-                for key, cw in book.items()
-            }
-    finally:
-        train.unpersist()
-    if _return_book:
-        # the trained {(subspace, code): codeword} dict IS the model
-        # state the Lloyd loop already holds driver-side — returning
-        # it directly lets iterative callers (train_opq) skip a
-        # createDataFrame → collect round-trip per round (VERDICT r15
-        # item 5: batch model-state collects per iteration)
-        return book
+            return init
+        book = _collect_book(init)
+    book = _lloyd_rounds(vectors, book, vec_id, vec_col, n_iter,
+                         train_sample_mod, "l2")
     return spark.createDataFrame(
         [(m, c, w) for (m, c), w in sorted(book.items())],
         "subspace int, code long, codeword array<double>",
@@ -2161,9 +2059,10 @@ def train_opq(
     """Learned (non-parametric) OPQ — Ge et al. 2013 §non-parametric
     solution, the iterative upgrade of ``opq_reorder``'s one-shot
     eigenvalue allocation: alternate (a) train PQ codebooks in the
-    current rotated space (``train_pq_codebook``, hash-seeded Lloyd)
-    and (b) re-solve the rotation as an orthogonal Procrustes problem
-    against the codebooks' reconstructions. The learned parameter is a
+    current rotated space (the PQ Lloyd of ``train_pq_codebook``,
+    hash-seeded on the first pass) and (b) re-solve the rotation as an
+    orthogonal Procrustes problem against the codebooks'
+    reconstructions. The learned parameter is a
     SQUARE d_out×d_out rotation R applied AFTER the fixed init
     projection B (the paper's own composition — PCA-reduce first,
     rotate square in the reduced space): for square R,
@@ -2195,8 +2094,8 @@ def train_opq(
     error (init state first, final rotation+codebook last). Both
     alternation steps are non-increasing — the rotation update is the
     exact Procrustes minimizer and codebooks WARM-START from the
-    previous round's book (``init_book``), so history is monotone up
-    to the Lloyd 9dp sum rounding (pinned). The returned
+    previous round's book, so history is monotone up to the Lloyd 9dp
+    sum rounding (pinned). The returned
     (model, codebook) is still the BEST MEASURED state (belt and
     braces for that rounding edge): its distortion is
     ``min(history)``, never worse than the parametric init at
@@ -2249,7 +2148,6 @@ def train_opq(
     zero_mu = [0.0] * d_out
     eye_base = np.eye(d_out).tolist()
     history: list[float] = []
-    codebook = None
     R = np.eye(d_out)
 
     def composed_rows():
@@ -2258,10 +2156,7 @@ def train_opq(
 
     def to_books(book):
         # {(subspace, code): codeword} → per-subspace codeword lists,
-        # code-ascending — the same ordering collect_books derived from
-        # the codebook frame before the dict pass-through existed
-        # (VERDICT r15 item 5: the per-round createDataFrame → collect
-        # round-trip was a pure model-state echo, one job per round)
+        # code-ascending
         books = []
         for s in range(m_subspaces):
             codes = sorted(
@@ -2270,39 +2165,27 @@ def train_opq(
         return books
 
     best = None                         # (err, R, books)
-    prev_book = None                    # warm start across rounds
-    for _ in range(n_rounds):
+    book = None                         # warm start across passes
+    # n_rounds alternations, then one last codebook + distortion pass in
+    # the final rotation (no rotation update after it)
+    for r in range(n_rounds + 1):
         proj = project_pca(
             a0, (zero_mu, R.tolist(), ratios), "__a0", "__opq",
             unroll_threshold=0)
-        trained = train_pq_codebook(
-            proj, dim=d_out, m_subspaces=m_subspaces, k_codes=k_codes,
-            vec_id=vec_id, vec_col="__opq", n_iter=pq_iter,
-            init_book=prev_book, _return_book=True)
-        books = to_books(trained)
-        prev_book = {(si, ci): w for si, rows_ in enumerate(books)
-                     for ci, w in enumerate(rows_)}
+        if book is None:
+            book = _collect_book(train_pq_codebook(
+                proj, dim=d_out, m_subspaces=m_subspaces, k_codes=k_codes,
+                vec_id=vec_id, vec_col="__opq", n_iter=0))
+        book = _lloyd_rounds(proj, book, vec_id, "__opq", pq_iter, 1, "l2")
+        books = to_books(book)
         M, err, n = _opq_procrustes_stats(
             a0, "__a0", zero_mu, eye_base, R.tolist(), books)
         history.append(err / n / d_out)
         if best is None or history[-1] < best[0]:
             best = (history[-1], R.copy(), books)
-        U, _, Vh = np.linalg.svd(M, full_matrices=False)
-        R = Vh.T @ U.T                  # exact square-Procrustes update
-    # final codebook in the final rotation + its distortion
-    proj = project_pca(
-        a0, (zero_mu, R.tolist(), ratios), "__a0", "__opq",
-        unroll_threshold=0)
-    trained = train_pq_codebook(
-        proj, dim=d_out, m_subspaces=m_subspaces, k_codes=k_codes,
-        vec_id=vec_id, vec_col="__opq", n_iter=pq_iter,
-        init_book=prev_book, _return_book=True)
-    books = to_books(trained)
-    _, err, n = _opq_procrustes_stats(
-        a0, "__a0", zero_mu, eye_base, R.tolist(), books)
-    history.append(err / n / d_out)
-    if history[-1] < best[0]:
-        best = (history[-1], R, books)
+        if r < n_rounds:
+            U, _, Vh = np.linalg.svd(M, full_matrices=False)
+            R = Vh.T @ U.T              # exact square-Procrustes update
     # keep-best: with warm-started codebooks both alternation steps
     # are non-increasing, but the Lloyd update rounds per-position
     # sums to 9dp, so a boundary-adjacent state can in principle
@@ -2310,7 +2193,6 @@ def train_opq(
     # codebook) pair — the returned model's distortion is
     # min(history), never worse than the parametric init (history[0]).
     _, R, books = best
-    a0.unpersist()
     spark = vectors.sparkSession
     codebook = spark.createDataFrame(
         [(s, c, w) for s, rows_ in enumerate(books)

@@ -126,15 +126,20 @@ from contextlib import contextmanager
 @contextmanager
 def model_state_exec(spark):
     """Temporarily disable adaptive query execution around an action
-    whose EVERY exchange is model-state-sized by construction (Lloyd
-    sufficient statistics: ≤ partitions × k × dim scalar rows; CC label
-    sums over a small graph). AQE's value is runtime re-planning of
-    DATA-sized shuffles (coalescing, skew splits); for a bounded-size
-    shuffle it only adds one extra job submission + re-optimization per
-    exchange — measured ~0.1-0.3 s of fixed cost per iterative round at
-    bench SF, × rounds × callers. Restores the previous setting on
-    exit; the engine never runs driver threads concurrently, so the
-    session-wide toggle cannot race another query."""
+    whose EVERY exchange is model-state-sized by construction. Its one
+    caller is the Lloyd round of ``operators.knn._lloyd_rounds``
+    (sufficient statistics: ≤ partitions × k × dim scalar rows). AQE's
+    value is runtime re-planning of DATA-sized shuffles (coalescing,
+    skew splits); for a bounded-size shuffle it only adds one extra job
+    submission + re-optimization per exchange — measured ~0.1-0.3 s of
+    fixed cost per iterative round at bench SF, × rounds × callers.
+    Restores the previous setting on exit; the engine never runs driver
+    threads concurrently, so the session-wide toggle cannot race
+    another batch query. Streaming queries plan each epoch on a session
+    cloned at ``start()``: a running stream neither sees the toggle nor
+    leaks its own epochs' toggles back (``test_streaming`` pins the
+    latter). A stream started from another driver thread WHILE the
+    toggle is on would clone AQE off for its whole life."""
     prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:

@@ -1372,15 +1372,15 @@ def test_semantic_dedup_family_survives_empty_input(spark):
 
 
 def test_lloyd_arrow_stats_match_literal_expression_round(spark, sf_dir):
-    """The r15 Arrow Lloyd kernels must reproduce the literal-expression
-    round they replaced EXACTLY: same argmax/argmin assignment (ties to
-    the smaller cell/code id), same 9dp-rounded per-(key, pos) sums and
-    member counts. Pinned against the original spelling built inline
-    from the same public pieces (_nearest_cell_expr + posexplode +
-    hash aggregate) over the real fixture vectors."""
+    """The Arrow Lloyd kernel must reproduce the literal-expression
+    rounds it replaced EXACTLY, for both metrics: same argmax/argmin
+    assignment (ties to the smaller cell/code id), same 9dp-rounded
+    per-(key, pos) sums and member counts. Pinned against the original
+    spellings built inline from the same public pieces
+    (_nearest_cell_expr + posexplode + hash aggregate) over the real
+    fixture vectors."""
     from pyspark_deduplication_spark.operators.knn import (
-        _lloyd_centroid_stats,
-        _lloyd_pq_stats,
+        _lloyd_stats,
         _nearest_cell_expr,
         _subvec,
     )
@@ -1411,8 +1411,9 @@ def test_lloyd_arrow_stats_match_literal_expression_round(spark, sf_dir):
     }
     got = {
         (int(r["cell_id"]), int(r["pos"])): (float(r["s"]), int(r["n"]))
-        for r in _lloyd_centroid_stats(emb, sorted(cents.items()),
-                                       "embedding")
+        for r in _lloyd_stats(emb, {(0, c): w for c, w in cents.items()},
+                              "embedding", "cosine")
+        .withColumnRenamed("code", "cell_id")
         .groupBy("cell_id", "pos")
         .agg(F.round(F.sum("s"), 9).alias("s"), F.sum("n").alias("n"))
         .collect()
@@ -1468,9 +1469,119 @@ def test_lloyd_arrow_stats_match_literal_expression_round(spark, sf_dir):
     got_pq = {
         (int(r["subspace"]), int(r["code"]), int(r["pos"])):
             (float(r["s"]), int(r["n"]))
-        for r in _lloyd_pq_stats(emb, book, m_sub, sub, "embedding")
+        for r in _lloyd_stats(emb, book, "embedding", "l2")
         .groupBy("subspace", "code", "pos")
         .agg(F.round(F.sum("s"), 9).alias("s"), F.sum("n").alias("n"))
         .collect()
     }
     assert got_pq == want_pq
+
+
+def _numpy_lloyd(X, book, metric, n_iter, empties):
+    """Plain numpy Lloyd over one subspace: ``book`` maps code →
+    codeword. Cosine scores by the dot against unit codewords (a
+    zero/NaN-norm codeword scores as-is) with np.argmax, which takes
+    the first maximum or NaN; L2 demotes NaN distances to +inf before
+    np.argmin. Codes ascend, so ties go to the smaller code. Sums round
+    to 9 decimals before the mean; an empty code keeps its codeword and
+    is appended to ``empties``."""
+    codes = sorted(book)
+    for _ in range(n_iter):
+        C = np.array([book[c] for c in codes], dtype=np.float64)
+        if metric == "cosine":
+            nrm = np.sqrt((C * C).sum(axis=1, keepdims=True))
+            C = np.where(nrm > 0, C / np.where(nrm > 0, nrm, 1.0), C)
+            score = np.stack([(X * c).sum(axis=1) for c in C], axis=1)
+            best = np.argmax(score, axis=1)
+        else:
+            d = np.stack([((X - c) ** 2).sum(axis=1) for c in C], axis=1)
+            best = np.argmin(np.where(np.isnan(d), np.inf, d), axis=1)
+        new = {}
+        for j, c in enumerate(codes):
+            members = X[best == j]
+            if len(members):
+                new[c] = np.round(members.sum(axis=0), 9) / len(members)
+            else:
+                empties.append(c)
+                new[c] = np.asarray(book[c], dtype=np.float64)
+        book = new
+    return book
+
+
+def test_lloyd_trainers_match_numpy_reference(spark):
+    """train_centroids and train_pq_codebook with n_iter=2 against a
+    numpy Lloyd from the same n_iter=0 init. Two elected
+    representatives are made identical, so one code loses every tie
+    and goes empty (it must keep its previous codeword). In PQ
+    subspace 1 the row elected for code 1 gets an inf: its distance to
+    its own codeword is inf-inf = NaN, which must sort after the inf
+    distances to the other codes, so it lands in code 0 and code 1
+    goes empty."""
+    from pyspark_deduplication_spark.operators.knn import (
+        train_centroids,
+        train_pq_codebook,
+    )
+
+    rng = np.random.default_rng(5)
+    n, dim, n_cells, m_sub, k_codes = 60, 8, 4, 2, 3
+    sub = dim // m_sub
+    X = rng.standard_normal((n, dim))
+
+    def frame(X):
+        return spark.createDataFrame(
+            [(i, [float(x) for x in row]) for i, row in enumerate(X)],
+            "vec_id long, embedding array<double>")
+
+    def elected(vals, cols):
+        # id of the row each init codeword was elected from (election
+        # depends on ids only, so it survives the edits below)
+        return [next(i for i in range(n) if list(X[i, cols]) == list(v))
+                for v in vals]
+
+    # --- centroids: cells c0 < c1 elect identical vectors
+    init = sorted((int(r["cell_id"]), [float(x) for x in r["centroid"]])
+                  for r in train_centroids(frame(X), n_cells,
+                                           n_iter=0).collect())
+    r0, r1 = elected([init[0][1], init[1][1]], slice(0, dim))
+    X[r1] = X[r0]
+    init = {int(r["cell_id"]): [float(x) for x in r["centroid"]]
+            for r in train_centroids(frame(X), n_cells, n_iter=0).collect()}
+    empties: list[int] = []
+    want = _numpy_lloyd(X, init, "cosine", 2, empties)
+    assert sorted(init)[1] in empties
+    got = {int(r["cell_id"]): list(r["centroid"])
+           for r in train_centroids(frame(X), n_cells, n_iter=2).collect()}
+    assert sorted(got) == sorted(want)
+    for c in want:
+        np.testing.assert_allclose(got[c], want[c], rtol=0, atol=1e-9)
+
+    # --- PQ codebook: codes 0 < 1 of subspace 0 elect identical
+    # subvectors; the code-1 representative of subspace 1 gets an inf
+    def pq_init(df):
+        return {(int(r["subspace"]), int(r["code"])):
+                [float(x) for x in r["codeword"]]
+                for r in train_pq_codebook(df, dim, m_sub, k_codes,
+                                           n_iter=0).collect()}
+
+    book0 = pq_init(frame(X))
+    r0, r1 = elected([book0[(0, 0)], book0[(0, 1)]], slice(0, sub))
+    (r2,) = elected([book0[(1, 1)]], slice(sub, dim))
+    X[r1, :sub] = X[r0, :sub]
+    X[r2, sub + 1] = np.inf
+    book0 = pq_init(frame(X))
+    got = {(int(r["subspace"]), int(r["code"])): list(r["codeword"])
+           for r in train_pq_codebook(frame(X), dim, m_sub, k_codes,
+                                      n_iter=2).collect()}
+    assert sorted(got) == sorted(book0)
+    for s in range(m_sub):
+        empties = []
+        with np.errstate(invalid="ignore"):
+            want = _numpy_lloyd(
+                X[:, s * sub:(s + 1) * sub],
+                {c: w for (m, c), w in book0.items() if m == s}, "l2", 2,
+                empties)
+        assert 1 in empties
+        for c in want:
+            np.testing.assert_allclose(got[(s, c)], want[c],
+                                       rtol=0, atol=1e-9)
+    assert got[(1, 0)][1] == np.inf

@@ -402,11 +402,16 @@ def test_streaming_embedding_ingest_drops_cross_epoch_semantic_dups(
          (11, v3)],
         schema).coalesce(1).write.mode("overwrite").parquet(f"{src}/f2")
 
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
     stream = (spark.readStream.format("parquet").schema(schema)
               .option("maxFilesPerTrigger", "1").load(f"{src}/*"))
     q = streaming_embedding_ingest(stream, corpus_dir, ckpt,
                                    threshold=0.95, n_cells=4)
     q.awaitTermination(180)
+    # the epochs train centroids under model_state_exec (AQE off) on
+    # the stream's own session clone; the toggle must not reach this
+    # session
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
 
     final = spark.read.parquet(corpus_dir)
     ids = sorted(r.vec_id for r in final.select("vec_id").collect())

@@ -34,6 +34,7 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from pyspark_deduplication_spark.plans.inspect import explain_str
     from pyspark_deduplication_spark.queries import CATALOG
     from pyspark_deduplication_spark.session import get_spark
 
@@ -76,9 +77,7 @@ def main() -> None:
         n_jobs = len(job_ids)
         sc.setJobGroup("idle", "idle")
 
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution
-            .ExplainMode.fromString("formatted"))
+        plan = explain_str(df)
         with open(os.path.join(plan_dir, f"{name}.txt"), "w") as fh:
             fh.write(plan)
         counts = {
